@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Dedup
 
@@ -14,47 +15,51 @@ import graft.operators.Dedup
   * table names.
   *
   * The reference's `INSERT ... ON CONFLICT (hash, partition_id) DO UPDATE`
-  * (S9) becomes: dedup on (hash, partition_id) keeping the incoming row, then
-  * dynamic partition overwrite of only the touched partitions.
+  * (S9) becomes a dynamic overwrite of only the touched partitions, with
+  * each release evaluated once and shuffled once: (1) list the stored
+  * partitions, metadata only; (2) pin the release once and merge in stored
+  * rows only for partitions it overlaps; (3) one (partition_id, hash bucket)
+  * exchange serves both the dedup window and the write's file clustering.
   */
 object EavStore {
 
-  /** S9/S10: idempotent upsert — pre-dedup (reference `uploader.py:308-312`)
-    * then dynamic-overwrite only the partitions present in `df`. */
+  /** S9/S10: idempotent upsert. Duplicate (hash, partition_id) rows in `df`
+    * keep the earliest `date` (reference `uploader.py:308-312`), incoming rows
+    * replace stored ones on the same key, and only `df`'s partitions are
+    * rewritten. On executor loss:
+    *   - `df` is persisted MEMORY_AND_DISK once, unless the caller cached it
+    *     (only upsert's own pin is unpersisted). A lost block is recomputed
+    *     from `df`'s lineage, so `df` must not read the partitions it replaces.
+    *   - Stored rows kept in a re-published partition are localCheckpointed
+    *     eagerly, as the overwrite deletes their files. A lost block has no
+    *     lineage and fails the write before its commit, leaving the store as
+    *     it was (dynamic overwrite swaps partitions at commit); re-run it. */
   def upsert(spark: SparkSession, df: DataFrame, path: String): Unit = {
-    val existing = readIfExists(spark, path)
-    val incoming = Dedup.exactFirst(df, Seq("hash", "partition_id"), "date")
-    val merged = existing match {
-      case Some(old) =>
-        // Partition values are metadata-scale: collect the touched ids and
-        // filter the store with isin so the old-side read is partition-PRUNED
-        // (a semi join would shuffle the whole store instead). Keep old rows
-        // only where no incoming row claims the same (hash, partition_id).
-        val touched = incoming.select("partition_id").distinct()
-          .collect().map(_.getString(0)).toSeq
-        val keepOld = old
-          .where(col("partition_id").isin(touched.map(_.asInstanceOf[Any]): _*))
-          .join(incoming.select("hash", "partition_id"),
-            Seq("hash", "partition_id"), "left_anti")
-        // Only keepOld reads the path being overwritten — checkpoint just
-        // that (usually a small remainder), not the whole merged set.
-        incoming.unionByName(keepOld.localCheckpoint())
-      case None => incoming
-    }
-    // Cluster on (partition_id, bounded hash bucket) before the partitioned
-    // write: without it every shuffle task holds rows of every partition and
-    // writes a file into each — partitions × tasks small files at scale.
-    // With it each store partition gets at most FilesPerPartition sized
-    // files, and the (partition_id, bucket) combos still spread across the
-    // executor pool for parallel writing. One extra shuffle of the output,
-    // paid once at the sink.
-    merged
-      .repartition(col("partition_id"), pmod(xxhash64(col("hash")), lit(FilesPerPartition)))
-      .write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("partition_id")
-      .parquet(path)
+    val stored = partitionDirs(spark, path).map(d => partitionValue(d.getName)).toSet
+    val pin = stored.nonEmpty && df.storageLevel == StorageLevel.NONE
+    if (pin) df.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // Partition ids are metadata-scale: isin keeps the store read
+      // partition-PRUNED (a semi join would shuffle the whole store).
+      val overlap = if (stored.isEmpty) Seq.empty
+        else df.select("partition_id").distinct().collect()
+          .map(_.getString(0)).filter(stored).toSeq
+      val merged = if (overlap.isEmpty) df else {
+        // Old rows no incoming row claims: disjoint from df by key.
+        val keepOld = read(spark, path)
+          .where(col("partition_id").isin(overlap.map(_.asInstanceOf[Any]): _*))
+          .join(df.select("hash", "partition_id"), Seq("hash", "partition_id"), "left_anti")
+        df.unionByName(keepOld.localCheckpoint())
+      }
+      // One exchange on (partition_id, bounded hash bucket): at most
+      // FilesPerPartition files per store partition, spread across the pool.
+      // The dedup window reuses it; hash second sorts each file by hash.
+      val clustered = merged
+        .withColumn("__bucket", pmod(xxhash64(col("hash")), lit(FilesPerPartition)))
+        .repartition(col("partition_id"), col("__bucket"))
+      overwrite(Dedup.exactFirst(clustered, Seq("partition_id", "hash", "__bucket"), "date")
+        .drop("__bucket"), path)
+    } finally if (pin) df.unpersist()
   }
 
   /** Upper bound on parquet files per partition value per write — also the
@@ -97,14 +102,8 @@ object EavStore {
       // FilesPerPartition buckets when maxFiles < FilesPerPartition would
       // leave the partition still "fragmented" and re-rewrite it forever
       val buckets = math.min(maxFiles, FilesPerPartition)
-      slice
-        .repartition(col("partition_id"),
-          pmod(xxhash64(col("hash")), lit(buckets)))
-        .write
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("partition_id")
-        .parquet(path)
+      overwrite(slice.repartition(col("partition_id"),
+        pmod(xxhash64(col("hash")), lit(buckets))), path)
     }
     fragmented
   }
@@ -126,6 +125,11 @@ object EavStore {
         partitionValue(d.getName)
       }
   }
+
+  /** Dynamic partition overwrite: replaces only the partitions `df` holds. */
+  private def overwrite(df: DataFrame, path: String): Unit =
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("partition_id").parquet(path)
 
   private def hadoopFs(spark: SparkSession, path: String) =
     new org.apache.hadoop.fs.Path(path)
@@ -158,10 +162,5 @@ object EavStore {
       } else { sb.append(c); i += 1 }
     }
     sb.toString
-  }
-
-  private def readIfExists(spark: SparkSession, path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (hadoopFs(spark, path).exists(p)) Some(spark.read.parquet(path)) else None
   }
 }

@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.functions.HashFunctions
 import graft.operators._
@@ -26,6 +27,28 @@ object MainPipeline {
   /** Deterministic stand-in for the release timestamp (`%Y_%-m_%-d` shape,
     * uploader.py:246-252): one value per release, NOT per series row. */
   def releaseDate(releaseId: Int): String = s"2026_8_$releaseId"
+
+  /** A number as Python's `repr` (so `json.dumps`, and DuckDB's
+    * `CAST(DOUBLE AS VARCHAR)`) writes it: positional for
+    * 1e-4 <= |x| < 1e16, else `<digits>e±XX`. A string cast (like `to_json`)
+    * gives Java's `Double.toString`, whose exponent form starts outside
+    * 1e-3 <= |x| < 1e7; only that form is rewritten, keeping Java's digits. */
+  def pyRepr(x: Column): Column = {
+    val s = x.cast("string")
+    val re = "^(-?)([0-9])\\.([0-9]+)E(-?[0-9]+)$"
+    def part(i: Int) = regexp_extract(s, re, i)
+    val (sign, lead, e) = (part(1), part(2), part(4).try_cast("int"))
+    val frac = regexp_replace(part(3), "0+$", "")
+    val digits = concat(lead, frac)
+    val mantissa = concat(lead, when(frac =!= "", concat(lit("."), frac)).otherwise(""))
+    val exponent = concat(when(e < 0, "e-").otherwise("e+"), format_string("%02d", abs(e)))
+    val tail = call_function("substr", digits, e + 2)
+    when(!s.contains("E"), s)
+      .when(e >= 16 || e < -4, concat(sign, mantissa, exponent))
+      .when(e < 0, concat(sign, lit("0.000"), digits)) // e = -4: Java is positional from 1e-3
+      .otherwise(concat(sign, call_function("rpad", digits, e + 1, lit("0")), lit("."),
+        when(tail === "", "0").otherwise(tail)))
+  }
 
   def run(spark: SparkSession, sfDir: String, releaseId: Int = 1): DataFrame = {
     HashFunctions.register(spark)
@@ -61,11 +84,16 @@ object MainPipeline {
     // R2 + P8: melt wide → EAV long with JSON-wrapped payloads
     val metrics = Seq("qty", "qtyRollingSum", "qtyChange", "qtyDirection",
       "qtyChangePercentage", "qtyRollingRate")
-    // `ignoreNullFields=false` so a null metric wraps as {"value":null} like
-    // the reference's json.dumps (uploader.py:501-508), not as {}.
+    // A null metric wraps as {"value":null} like the reference's json.dumps
+    // (uploader.py:501-508), not as {}; numbers are written the way it
+    // writes them (see pyRepr), strings are escaped by to_json.
+    val types = trimmed.schema
     val wrapped = metrics.foldLeft(trimmed) { (acc, m) =>
-      acc.withColumn(m,
-        to_json(struct(col(m).as("value")), Map("ignoreNullFields" -> "false")))
+      acc.withColumn(m, types(m).dataType match {
+        case StringType =>
+          to_json(struct(col(m).as("value")), Map("ignoreNullFields" -> "false"))
+        case _ => concat(lit("{\"value\":"), coalesce(pyRepr(col(m)), lit("null")), lit("}"))
+      })
     }
     val long = Reshape.melt(
       wrapped.select((keys ++ Seq("date") ++ metrics).map(col): _*),

@@ -1,6 +1,13 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
+
 import graft.pipeline.EavStore
 
 class EavStoreSpec extends SparkSpec {
@@ -8,6 +15,37 @@ class EavStoreSpec extends SparkSpec {
 
   private def row(hash: String, part: String, date: String, payload: String) =
     (hash, 1, "supplier", "1", "qty", part, java.sql.Date.valueOf(date), payload)
+
+  private val cols = Seq("hash", "release_id", "areaType", "areaCode", "metric",
+    "partition_id", "date", "payload")
+
+  private def rows(part: String, n: Int, tag: String): DataFrame =
+    (1 to n).map(i => row(s"h$i", part, "2021-01-01", s"$tag$i")).toDF(cols: _*)
+
+  private def payloads(dir: String): Map[(String, String), String] =
+    EavStore.read(spark, dir).select("hash", "partition_id", "payload")
+      .as[(String, String, String)].collect()
+      .map { case (h, p, v) => (h, p) -> v }.toMap
+
+  private def parquetFiles(dir: String, part: String): Map[String, Long] =
+    new java.io.File(s"$dir/partition_id=$part").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(f => f.getName -> f.length).toMap
+
+  /** Input records over every task `body` runs, summed by a listener: source
+    * rows, one per columnar cache batch read back, one per checkpointed row
+    * read back. */
+  private def recordsRead(body: => Unit): Long = {
+    val n = new AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => n.addAndGet(m.inputMetrics.recordsRead))
+    }
+    ListenerBusDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; ListenerBusDrain.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    n.get
+  }
 
   test("upsert replaces rows on (hash, partition_id) and unions the rest") {
     val dir = Files.createTempDirectory("eav").toString + "/store"
@@ -182,5 +220,81 @@ class EavStoreSpec extends SparkSpec {
     assert(dropped === Seq("2026_8_1|supplier"))
     val rest = EavStore.read(spark, dir).select("hash").as[String].collect().toSeq
     assert(rest === Seq("h2"))
+  }
+
+  test("duplicate input keys keep the earliest date, into an empty store and a stored partition") {
+    val dir = Files.createTempDirectory("eav_dup").toString + "/store"
+    EavStore.upsert(spark, Seq(
+      row("h1", "p1", "2021-01-05", "late"), row("h1", "p1", "2021-01-02", "early"),
+      row("h2", "p1", "2021-01-03", "v2")).toDF(cols: _*), dir)
+    assert(payloads(dir) === Map(("h1", "p1") -> "early", ("h2", "p1") -> "v2"))
+    EavStore.upsert(spark, Seq(
+      row("h1", "p1", "2021-01-09", "late2"), row("h1", "p1", "2021-01-07", "early2"),
+      row("h3", "p1", "2021-01-01", "v3")).toDF(cols: _*), dir)
+    assert(payloads(dir) === Map(("h1", "p1") -> "early2", ("h2", "p1") -> "v2",
+      ("h3", "p1") -> "v3"))
+    assert(EavStore.read(spark, dir).count() === 3)
+  }
+
+  test("publishing a new partition leaves every stored partition's files as they were") {
+    val dir = Files.createTempDirectory("eav_newpart").toString + "/store"
+    EavStore.upsert(spark, rows("p1", 300, "a").unionByName(rows("p2", 300, "b")), dir)
+    val before = Seq("p1", "p2").map(p => p -> parquetFiles(dir, p)).toMap
+    EavStore.upsert(spark, rows("p3", 300, "c"), dir)
+    assert(Seq("p1", "p2").map(p => p -> parquetFiles(dir, p)).toMap === before)
+    assert(parquetFiles(dir, "p3").nonEmpty)
+    assert(EavStore.read(spark, dir).count() === 900)
+  }
+
+  test("upsert leaves a caller's cache in place and unpins only its own pin") {
+    val dir = Files.createTempDirectory("eav_cached").toString + "/store"
+    val cached = rows("p1", 50, "a").cache()
+    cached.count()
+    EavStore.upsert(spark, cached, dir)             // empty store
+    EavStore.upsert(spark, cached, dir)             // merge path
+    assert(cached.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    cached.unpersist()
+    val plain = rows("p1", 50, "b")
+    EavStore.upsert(spark, plain, dir)
+    assert(plain.storageLevel === StorageLevel.NONE)
+    assert(payloads(dir).values.toSet === (1 to 50).map(i => s"b$i").toSet)
+  }
+
+  test("write clustering bounds files per store partition on the merge path") {
+    val dir = Files.createTempDirectory("eav_mergefiles").toString + "/store"
+    def release(from: Int, tag: String) = (from until from + 3000).map(i =>
+      row(s"h$i", s"p${i % 3}", "2021-01-01", s"$tag$i")).toDF(cols: _*)
+    EavStore.upsert(spark, release(0, "a"), dir)
+    EavStore.upsert(spark, release(1500, "b"), dir)  // half replaces, half new
+    (0 until 3).foreach { p =>
+      val files = parquetFiles(dir, s"p$p").size
+      assert(files > 0 && files <= EavStore.FilesPerPartition,
+        s"partition p$p has $files files")
+    }
+    val after = payloads(dir)
+    assert(after.size === 4500)
+    assert(after(("h0", "p0")) === "a0" && after(("h1500", "p0")) === "b1500")
+  }
+
+  test("upsert evaluates its input once: it reads the source as one noop write does") {
+    val base = Files.createTempDirectory("eav_reads").toString
+    val dir = s"$base/store"
+    EavStore.upsert(spark, rows("p_old", 400, "a"), dir)
+    rows("p_new", 600, "b").repartition(3).write.parquet(s"$base/in")
+    val in = spark.read.parquet(s"$base/in")
+    val once = recordsRead(in.write.format("noop").mode("overwrite").save())
+    assert(once === 600)
+    // Each later job reads upsert's pin instead of the source: one record
+    // per cached batch, i.e. per input partition at this size. A second
+    // evaluation of the input would add another 600.
+    val pinReads = in.rdd.getNumPartitions
+    // a new partition: no stored rows, two jobs over the pin
+    val publish = recordsRead(EavStore.upsert(spark, in, dir))
+    assert(publish >= once && publish <= once + 2 * pinReads, s"publish read $publish")
+    // a re-publish adds only the overlapping partition's 600 stored rows
+    val again = recordsRead(EavStore.upsert(spark, in, dir))
+    assert(again >= once + 600 && again <= once + 600 + 3 * pinReads,
+      s"re-publish read $again")
+    assert(payloads(dir).size === 1000)
   }
 }

@@ -14,11 +14,29 @@ class PipelinesSpec extends SparkSpec {
     val metrics = out.select("metric").distinct().as[String].collect().toSet
     assert(metrics === Set("qty", "qtyRollingSum", "qtyChange", "qtyDirection",
       "qtyChangePercentage", "qtyRollingRate"))
-    // payload wraps every value, null included
+    // payload wraps every value, null included, and never in Java exponent form
     assert(out.where(!col("payload").startsWith("{\"value\":")).count() === 0)
+    assert(out.where(col("payload").rlike("[0-9]E")).count() === 0)
+    assert(out.where(col("payload") === "{\"value\":null}").count() > 0)
     // hash is a true row id: unique per (area, metric, date)
     assert(out.select("hash").distinct().count() === out.count())
     out.unpersist()
+  }
+
+  test("payload numbers render as Python repr / DuckDB CAST(DOUBLE AS VARCHAR)") {
+    // Java's Double.toString switches to exponent form at 1e7; the reference's
+    // json.dumps and the q64 DuckDB oracle stay positional below 1e16
+    val cases = Seq(
+      1e7 -> "10000000.0", 12345678.9 -> "12345678.9", -12345678.9 -> "-12345678.9",
+      123456789012345.6 -> "123456789012345.6", 9999999.0 -> "9999999.0",
+      1e16 -> "1e+16", -1.5e17 -> "-1.5e+17", 1.0 -> "1.0", -2.5 -> "-2.5",
+      0.0 -> "0.0", 0.001 -> "0.001", 1.5e-4 -> "0.00015", 1e-4 -> "0.0001",
+      1e-5 -> "1e-05", 2.5e-300 -> "2.5e-300")
+    val got = cases.map(_._1).toDF("x")
+      .select(MainPipeline.pyRepr(col("x"))).as[String].collect().toSeq
+    assert(got === cases.map(_._2))
+    assert(Seq(Option.empty[Double]).toDF("x")
+      .select(MainPipeline.pyRepr(col("x"))).as[String].collect().toSeq === Seq(null))
   }
 
   test("msoa pipeline: suppression + weekly sampling + packed payloads") {
