@@ -72,10 +72,7 @@ object ProfileSome {
         }
     }
 
-    // same warmup as Bench
-    graft.sources.Tables.names.foreach { t =>
-      spark.read.parquet(s"$sfDir/$t.parquet").count()
-    }
+    Bench.warmup(spark, sfDir)
     val names = args.toSeq
     for (name <- names; pass <- 1 to passes) {
       graft.queries.VectorQueries.fixtureBuildSec.clear()

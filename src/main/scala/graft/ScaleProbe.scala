@@ -316,8 +316,10 @@ object ScaleProbe {
             val qd = e.where(col("vec_id") % 50 === 0 && col("vec_id") < eoff)
               .select(col("vec_id").cast("long").as("q_id"),
                 col("embedding").cast("array<double>").as("q_emb"))
-            def serve(): DataFrame = graft.pipeline.IndexStore.queryInt8(
-              spark, p, qd, nProbe = 2, k = 5, shortlist = 100)
+            def serve(): DataFrame = graft.pipeline.IndexStore.serve(
+              spark, p, qd,
+              graft.pipeline.IndexStore.ServeSpec(graft.pipeline.IndexStore.Int8),
+              nProbe = 2, k = 5, shortlist = 100)
             time(serve()) // untimed warmup (codegen, listings)
             (time(serve()), serve().count())
           }

@@ -14,23 +14,16 @@ object VerifySome {
       SparkEntry.queries(name)(spark, sfDir).coalesce(1)
         .write.mode("overwrite").parquet(s"$outDir/$name")
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import Verify.jsonString
     val json = SparkEntry.oracleSql.view.filterKeys(names.contains)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // names.json tells check.py which queries this partial dump covers, so
     // its Python-oracle loop skips the ~12 undumped ones instead of failing
     // them as MISSING — without this a partial gate could never exit 0
     Files.writeString(Paths.get(s"$outDir/names.json"),
-      names.map(q).mkString("[", ",", "]"))
+      names.map(jsonString).mkString("[", ",", "]"))
     spark.stop()
   }
 }

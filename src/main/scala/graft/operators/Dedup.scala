@@ -75,11 +75,6 @@ object Dedup {
     }: _*)
   }
 
-  /** MinHash signature of a shingle array (convenience single-expression
-    * form; prefer the two-projection path for wide signatures). */
-  def minhashSignature(shinglesCol: Column, numHashes: Int): Column =
-    minhashFromHashes(shingleHashes(shinglesCol), numHashes)
-
   /** MinHash-LSH candidate pairs: signature → `bands` bands of
     * `numHashes/bands` rows each → band bucket hash → self-equi-join on
     * (band, bucket). Emits distinct (a_id, b_id) candidate pairs. */

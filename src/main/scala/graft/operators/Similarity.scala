@@ -1266,24 +1266,4 @@ object Similarity {
         (-col("m.neg_id")).as("top_vec_id"),
         col("m.cosine").as("max_cosine"))
   }
-
-  /** Embedding-cosine near-duplicate pairs: all (a, b) with cosine >=
-    * `threshold`, blocked by LSH bucket so the pair space never materializes
-    * globally. */
-  def cosineNearDupPairs(df: DataFrame, idCol: String, embCol: String, dim: Int,
-                         threshold: Double, nBits: Int = 8, nTables: Int = 4,
-                         seed: Long = 42L): DataFrame = {
-    val withBucket = df
-      .withColumn("tb", explode(lshBuckets(col(embCol), dim, nBits, nTables, seed)))
-      .select(col("tb.table").as("table"), col("tb.bucket").as("bucket"),
-        col(idCol), col(embCol))
-    val a = withBucket.toDF("table", "bucket", "a_id", "a_emb")
-    val b = withBucket.toDF("table", "bucket", "b_id", "b_emb")
-    a.join(b, Seq("table", "bucket"))
-      .where(col("a_id") < col("b_id"))
-      .select("a_id", "b_id", "a_emb", "b_emb").distinct()
-      .withColumn("cosine", round(dot(col("a_emb"), col("b_emb")), 4))
-      .where(col("cosine") >= threshold)
-      .select("a_id", "b_id", "cosine")
-  }
 }

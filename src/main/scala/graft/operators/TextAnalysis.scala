@@ -1,11 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Text-analysis scalar operators for training-data pipelines: token counting,
-  * language ID, quality scoring, document fingerprinting. All pure column
+  * quality scoring, document fingerprinting. All pure column
   * expressions (codegen'd) — no UDFs in the hot path.
   */
 object TextAnalysis {
@@ -15,12 +14,6 @@ object TextAnalysis {
 
   /** Token count (whitespace tokenization). */
   def tokenCount(textCol: Column): Column = size(tokens(textCol)).cast("long")
-
-  /** BPE-ish sub-token count: words + digit runs + punctuation marks each
-    * count as a token (regex split on boundaries). */
-  def subTokenCount(textCol: Column): Column =
-    size(filter(split(textCol, "(?=[^a-zA-Z0-9])|(?<=[^a-zA-Z0-9])"),
-      t => length(t) > 0)).cast("long")
 
   /** Stopword-hit count against a fixed lexicon. */
   def stopwordCount(textCol: Column, stopwords: Seq[String]): Column = {
@@ -82,12 +75,6 @@ object TextAnalysis {
     when(substring(md5(key.cast("string")), 1, 2) < lit(cutoff), "valid")
       .otherwise("train")
   }
-
-  /** Rolling-hash shingle fingerprints (winnowing-style document signature):
-    * the `keep` smallest hashes of the n-token shingles — a compact sketch for
-    * containment checks. */
-  def shingleSketch(textCol: Column, n: Int = 5, keep: Int = 8): Column =
-    slice(array_sort(transform(Dedup.shingles(textCol, n), s => xxhash64(s))), 1, keep)
 
   /** Corpus-unigram log-probability score — the classic LM-based quality
     * filter (documents whose tokens are improbable under the corpus unigram
@@ -192,22 +179,6 @@ object TextAnalysis {
           * 1e6 + 0.5).cast("long"))
       .groupBy(col(idCol))
       .agg((sum(col("__c")).cast("double") / 1e6).as("score"))
-  }
-
-  /** Language ID by stopword vote (see TextQueries.lexicon for the lexicon
-    * shape): returns per-doc best language; pure relational ops. */
-  def languageId(docs: DataFrame, idCol: String, textCol: String,
-                 lexicon: Seq[(String, String)]): DataFrame = {
-    val spark = docs.sparkSession
-    val lex = spark.createDataFrame(lexicon).toDF("cand_lang", "token")
-    val toks = docs.select(col(idCol), explode(tokens(col(textCol))).as("token"))
-    val scores = toks.join(broadcast(lex), Seq("token"))
-      .groupBy(col(idCol), col("cand_lang")).agg(count(lit(1)).as("hits"))
-    val best = Serving.topNPerGroup(scores, Seq(idCol),
-      Seq(col("hits").desc, col("cand_lang").asc), 1, useRowNumber = true)
-    docs.select(col(idCol))
-      .join(best.select(col(idCol), col("cand_lang")), Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("cand_lang"), lit("unknown")).as("predicted_lang"))
   }
 
   /** One counting step of byte-pair-encoding vocabulary induction (Sennrich

@@ -98,17 +98,6 @@ object Trim {
     df.where(!(isWeekly && col(payloadCol).isNull))
   }
 
-  /** P11 applied post-hoc to a derived-column family (reference
-    * `suppress_by_rolling_sum`, `msoa_etl_db/processor.py:211-226`): where the
-    * rolling sum is not > `minAllowed - 1`, null the whole family. */
-  def suppressFamily(df: DataFrame, rollingSumCol: String, family: Seq[String],
-                     keepAbove: Double = 2d): DataFrame = {
-    val keep = col(rollingSumCol) > keepAbove
-    val d = df.withColumn("__keep", keep)
-    family.filter(df.columns.toSet).foldLeft(d)((acc, m) =>
-      acc.withColumn(m, when(col("__keep"), col(m)))).drop("__keep")
-  }
-
   /** P10: nation override (reference `uploader.py:569-571`). */
   def overrideWhereIn(df: DataFrame, matchCol: String, values: Seq[String],
                       targetCol: String, newValue: String): DataFrame =

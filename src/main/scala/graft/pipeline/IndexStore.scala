@@ -40,7 +40,7 @@ import graft.operators.Similarity.IvfPqModel
   *     (cell, release) partitions. Re-running a failed append replaces, never
   *     duplicates. This composes the q124 (frozen-centroid cell assign) and
   *     q127 (frozen-codebook encode) halves into the store.
-  *   - [[query]]: load the metadata (a kilobyte driver read), probe, prune
+  *   - [[serve]]: load the metadata (a kilobyte driver read), probe, prune
   *     the code scan to the probed cells (a literal partition filter — the
   *     collected probe set is ≤ |queries| × nProbe cells), ADC-score, exact
   *     rerank. Work scales with the probed population, not the corpus.
@@ -343,106 +343,106 @@ object IndexStore {
     } yield rel.getPath.getName.stripPrefix("release=")).distinct
   }
 
-  /** Query-only serving: no training, no encoding — metadata load + probe +
-    * cell-pruned ADC + exact rerank. `queries` is (q_id long, q_emb
-    * array<double>); `fullVecs` (cand_id long, cand_emb array<double>)
-    * supplies the rerank's full vectors (only |queries| × shortlist ids are
-    * read from it, via broadcast joins). Identical answers to
-    * [[Similarity.ivfPqTopK]] on the same corpus by construction — both run
-    * [[Similarity.ivfPqServe]] on the same encode output. */
+  /** Where a [[serve]]'s exact rerank reads full vectors from. */
+  sealed trait Rerank
+
+  /** An external raw corpus (cand_id long, cand_emb array<double>). Only
+    * |queries| × shortlist ids are read from it, via broadcast joins; an
+    * OPQ store reflects it through the frozen rotation (an isometry, so the
+    * rotated dots equal the original-space dots up to fp rounding). */
+  final case class Raw(fullVecs: DataFrame) extends Rerank
+
+  /** The store's own int8 tier ([[buildRerank]]), dequantized and pruned to
+    * the probed cells — no raw-corpus access at all. */
+  case object Int8 extends Rerank
+
+  /** One serve request against the frozen index: the rerank side, plus two
+    * optional restrictions of the pruned code scan — a keep-set of
+    * candidate ids (`cand_id`) and a set of release tags. */
+  final case class ServeSpec(rerank: Rerank,
+                             keep: Option[DataFrame] = None,
+                             releases: Option[Seq[String]] = None)
+
+  /** The serve kernel of the frozen index — every serving read runs
+    * through it: no training, no encoding — metadata load (or the caller's
+    * `meta`), probe, cell-pruned ADC, exact rerank. `queries` is (q_id
+    * long, q_emb array<double>). Identical answers to
+    * [[Similarity.ivfPqTopK]] on the same corpus by construction — both
+    * run [[Similarity.ivfPqServe]] on the same encode output.
+    *
+    * Pruning: the probed-cell set is ≤ |queries| × nProbe ints, collected
+    * and applied as a LITERAL partition filter on the servable code scan
+    * (tombstones already excluded), so only the probed cells' directories
+    * are read — static pruning, no reliance on runtime DPP; IndexStoreSpec
+    * pins the PartitionFilters in the plan.
+    *
+    * `keep` is FILTERED serving (serve within a source, a licence class,
+    * not-in-a-blocklist …): a broadcast left-semi join on the pruned scan,
+    * BEFORE the ADC shortlist — pre-filtering, not post-filtering. Dropping
+    * excluded candidates after the shortlist would waste shortlist slots on
+    * them and can starve the final top-k when the filter is selective;
+    * with the filter first the answer is exactly the unfiltered chain run
+    * on the eligible sub-corpus under the same frozen quantizer (cells are
+    * probed by query geometry, unchanged by the filter). The keep-set is
+    * distinct-projected and broadcast — right for id-bounded filters; one
+    * too large to broadcast belongs in the layout as a partition column of
+    * the code table (release already works this way) — prune, don't join.
+    *
+    * `releases` is AS-OF serving, the time-travel read the (cell, release)
+    * layout makes free: a second static partition filter beside the cell
+    * one, so serving "what release N saw" reads exactly those releases'
+    * partitions of the probed cells. As-of selects the RESIDENT SET under
+    * the store's CURRENT frozen quantizer: appends never retrain, so before
+    * any rebalance the answer is bit-identical to what the store served
+    * when `releases` was its whole population (spec-pinned); after a
+    * rebalance the healed model re-encoded every release with provenance
+    * kept, so as-of reads the old residents through the healed cells — the
+    * only sound choice, since the swapped-out quantizer epoch is vacuumed.
+    *
+    * `Int8` reranks against the int8 tier, both scans partition-pruned to
+    * the probed cells. Dequantization is the q184 audit's exact IEEE
+    * spelling, so the recall delta against a `Raw` rerank is exactly what
+    * q184 bounds. Decontamination is [[Similarity.dropListFromMatches]]
+    * over this kernel with `k = shortlist` (see [[decontaminate]]). */
+  def serve(spark: SparkSession, path: String, queries: DataFrame,
+            spec: ServeSpec, nProbe: Int, k: Int, shortlist: Int,
+            meta: Option[StoreMeta] = None): DataFrame = {
+    spec.releases.foreach(r =>
+      require(r.nonEmpty, "an as-of serve needs at least one release tag"))
+    val m = meta.getOrElse(readMeta(spark, path))
+    val q = rotate(queries, "q_emb", m.rotation)
+    val probedCells = Similarity.ivfPqProbe(q, m.model, nProbe)
+      .select(col("cell")).distinct().collect().map(_.getInt(0)).sorted
+    val inCells = col("cell").isin(probedCells.map(Int.box): _*)
+    val scan = servableCodes(spark, path).where(spec.releases.fold(inCells)(
+      r => inCells && col("release").isin(r: _*)))
+    val enc = spec.keep.fold(scan)(ids => scan.join(broadcast(ids
+        .select(col("cand_id").cast("long").as("cand_id")).distinct()),
+      Seq("cand_id"), "left_semi"))
+    val cands = spec.rerank match {
+      case Raw(fullVecs) => rotate(fullVecs, "cand_emb", m.rotation)
+      case Int8 => rerankVecs(spark, path, probedCells)
+    }
+    Similarity.ivfPqServe(q, enc, cands, m.model, nProbe, k, shortlist)
+  }
+
+  /** [[serve]] with a raw-corpus rerank. */
   def query(spark: SparkSession, path: String, queries: DataFrame,
             fullVecs: DataFrame, nProbe: Int, k: Int,
-            shortlist: Int): DataFrame = {
-    val model = readModel(spark, path)
-    // an OPQ store lives in the rotated space: queries AND the rerank's
-    // full vectors reflect through the same frozen w (pure map; the
-    // reflection is an isometry so the rerank's rotated dots equal the
-    // original-space dots up to fp rounding)
-    val rot = readRotation(spark, path)
-    val q = rotate(queries, "q_emb", rot)
-    val fv = rotate(fullVecs, "cand_emb", rot)
-    // The probed-cell set is ≤ |queries| × nProbe ints — collect it and
-    // prune the code scan with a LITERAL partition filter, so only the
-    // probed cells' directories are ever read (static pruning; no reliance
-    // on runtime DPP). IndexStoreSpec pins the PartitionFilters in the plan.
-    val probedCells = Similarity.ivfPqProbe(q, model, nProbe)
-      .select(col("cell")).distinct().collect().map(_.getInt(0)).sorted
-    val enc = servableCodes(spark, path)
-      .where(col("cell").isin(probedCells.map(Int.box): _*))
-    Similarity.ivfPqServe(q, enc, fv, model, nProbe, k, shortlist)
-  }
+            shortlist: Int): DataFrame =
+    serve(spark, path, queries, ServeSpec(Raw(fullVecs)), nProbe, k, shortlist)
 
-  /** FILTERED serving: [[query]] with a metadata predicate, expressed as a
-    * keep-set of candidate ids — the "filtered vector search" every
-    * production retrieval stack needs (serve within a source, a language, a
-    * licence class, not-in-a-blocklist …).
-    *
-    * The filter applies to the PRUNED CODE SCAN, before the ADC shortlist —
-    * pre-filtering, not post-filtering: dropping excluded candidates after
-    * the shortlist would waste shortlist slots on them and can starve the
-    * final top-k entirely when the filter is selective. With the filter
-    * first, the shortlist and rerank see only eligible candidates, so the
-    * answer is exactly the unfiltered chain run on the eligible
-    * sub-corpus under the SAME frozen quantizer (cells are probed by query
-    * geometry, unchanged by the filter).
-    *
-    * Scale shape: identical to [[query]] plus one broadcast left-semi join
-    * on the probed cells' code rows. The keep-set is distinct-projected and
-    * broadcast — right for id-bounded filters (blocklists, eval sets,
-    * sampled sources). A filter too large to broadcast belongs in the
-    * store's layout instead: make it a partition column of the code table
-    * (release already works this way) and prune, don't join. */
+  /** [[serve]] with a raw-corpus rerank and a keep-set of candidate ids. */
   def queryFiltered(spark: SparkSession, path: String, queries: DataFrame,
                     fullVecs: DataFrame, keepIds: DataFrame, nProbe: Int,
-                    k: Int, shortlist: Int): DataFrame = {
-    val model = readModel(spark, path)
-    val rot = readRotation(spark, path)
-    val q = rotate(queries, "q_emb", rot)
-    val fv = rotate(fullVecs, "cand_emb", rot)
-    val probedCells = Similarity.ivfPqProbe(q, model, nProbe)
-      .select(col("cell")).distinct().collect().map(_.getInt(0)).sorted
-    val keep = keepIds
-      .select(col("cand_id").cast("long").as("cand_id")).distinct()
-    val enc = servableCodes(spark, path)
-      .where(col("cell").isin(probedCells.map(Int.box): _*))
-      .join(broadcast(keep), Seq("cand_id"), "left_semi")
-    Similarity.ivfPqServe(q, enc, fv, model, nProbe, k, shortlist)
-  }
-
-  /** AS-OF serving: [[query]] restricted to a set of release tags — the
-    * time-travel read the (cell, release) layout exists to make free. The
-    * release predicate is a SECOND static partition filter on the code
-    * scan (alongside the probed-cell one), so serving "what release N saw"
-    * reads exactly release-N partitions of the probed cells and costs no
-    * more than a plain serve of that era's corpus.
-    *
-    * Semantics: as-of selects the RESIDENT SET, under the store's CURRENT
-    * frozen quantizer. Appends never retrain (so before any rebalance the
-    * answer is bit-identical to what the store served when `releases` was
-    * its whole population — spec-pinned); after a rebalance the healed
-    * model re-encoded every release with provenance kept, so as-of reads
-    * the old residents through the healed cells — the only sound choice,
-    * since a swapped-out quantizer epoch is vacuumed by the swap. */
-  def queryAsOf(spark: SparkSession, path: String, queries: DataFrame,
-                fullVecs: DataFrame, releases: Seq[String], nProbe: Int,
-                k: Int, shortlist: Int): DataFrame = {
-    require(releases.nonEmpty, "queryAsOf needs at least one release tag")
-    val model = readModel(spark, path)
-    val rot = readRotation(spark, path)
-    val q = rotate(queries, "q_emb", rot)
-    val fv = rotate(fullVecs, "cand_emb", rot)
-    val probedCells = Similarity.ivfPqProbe(q, model, nProbe)
-      .select(col("cell")).distinct().collect().map(_.getInt(0)).sorted
-    val enc = servableCodes(spark, path)
-      .where(col("cell").isin(probedCells.map(Int.box): _*) &&
-        col("release").isin(releases: _*))
-    Similarity.ivfPqServe(q, enc, fv, model, nProbe, k, shortlist)
-  }
+                    k: Int, shortlist: Int): DataFrame =
+    serve(spark, path, queries, ServeSpec(Raw(fullVecs), keep = Some(keepIds)),
+      nProbe, k, shortlist)
 
   /** Build the INT8 RERANK TIER: the store's own at-rest copy of the
     * resident vectors, scalar-quantized per dimension (q82's 4× compression)
     * and partitioned by the SAME (cell, release) layout as the ADC codes —
-    * so the exact-rerank pass of [[queryInt8]] reads only the probed cells'
+    * so an [[Int8]] [[serve]]'s exact rerank reads only the probed cells'
     * directories, from a table 4× smaller than the raw float64 corpus.
     *
     * At 100 TB this is the biggest remaining constant factor on the serve
@@ -454,7 +454,7 @@ object IndexStore {
     * float truth); q188 serves through this tier under that audit.
     *
     * For an OPQ store the quantization lives in the ROTATED space (the
-    * space the rerank dots are computed in), so [[queryInt8]] never
+    * space the rerank dots are computed in), so an [[Int8]] serve never
     * re-rotates candidates. Layout under `path/rerank`:
     *   - `stats` — (i int, lo double, hi double): per-dim range, kilobytes.
     *   - `codes` — (cand_id long, q8 array<int>) PARTITIONED BY
@@ -545,6 +545,25 @@ object IndexStore {
     spark.read.parquet(s"$path/rerank/stats")
   }
 
+  /** The tier's frozen per-dim ranges (i, lo, hi), sorted by i, from ONE
+    * parquet read that also carries the tier's generation stamp: a tier
+    * stamped under another model generation than the store's is refused
+    * with `refusal(tierGen, storeGen)`. An unstamped tier passes. */
+  private def frozenRerankStats(spark: SparkSession, path: String,
+                                refusal: (Long, Long) => String)
+      : Array[(Int, Double, Double)] = {
+    val raw = readRawRerankStats(spark, path)
+    val gen = if (raw.columns.contains("gen")) col("gen").cast("long")
+      else lit(null).cast("long")
+    val rows = raw.select(col("i").cast("int"), col("lo").cast("double"),
+      col("hi").cast("double"), gen).collect()
+    rows.headOption.filterNot(_.isNullAt(3)).map(_.getLong(3)).foreach { g =>
+      val cur = generation(spark, path)
+      require(g == cur, refusal(g, cur))
+    }
+    rows.map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2))).sortBy(_._1)
+  }
+
   /** Roll the int8 rerank tier FORWARD with a nightly append: the new
     * release's vectors quantize under the store's FROZEN stats (the stats
     * are model state, like the codebooks — retrained only by a rebalance's
@@ -567,17 +586,15 @@ object IndexStore {
     // same epoch guard as the serve path: appending under another
     // generation's frozen stats would quantize with dead ranges and mix
     // quantizer epochs in one tier — rebuild first (see [[rerankVecs]])
-    rerankGeneration(spark, path).foreach { g =>
-      val cur = generation(spark, path)
-      require(g == cur,
-        s"int8 rerank tier is stamped with model generation $g but the " +
-          s"store is at generation $cur — rebuild it before appending")
-    }
+    val stats = frozenRerankStats(spark, path, (g, cur) =>
+      s"int8 rerank tier is stamped with model generation $g but the " +
+        s"store is at generation $cur — rebuild it before appending")
     val fv = rotate(newVecs, "cand_emb",
       rot.getOrElse(readRotation(spark, path)))
     val ex = fv.select(col("cand_id"),
       posexplode(col("cand_emb")).as(Seq("i", "v")))
-    writeRerankCodes(spark, path, ex, readRerankStats(spark, path),
+    import spark.implicits._
+    writeRerankCodes(spark, path, ex, stats.toSeq.toDF("i", "lo", "hi"),
       dynamic = true, codesFilter = col("release") === release)
   }
 
@@ -621,52 +638,11 @@ object IndexStore {
   private val sharedReranks =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** [[query]] served ENTIRELY from the store: the ADC shortlist from the
-    * code table as always, the exact rerank against the int8 tier's
-    * DEQUANTIZED vectors ([[buildRerank]]) instead of an external raw
-    * float64 corpus — both scans partition-pruned to the probed cells.
-    * Dequantization is the q184 audit's exact IEEE spelling
-    * (lo + q·(hi−lo)/255, per-dim [lo, hi] as kilobyte driver literals),
-    * so the recall delta vs [[query]] is exactly what q184 bounds. */
-  def queryInt8(spark: SparkSession, path: String, queries: DataFrame,
-                nProbe: Int, k: Int, shortlist: Int): DataFrame = {
-    val model = readModel(spark, path)
-    val q = rotate(queries, "q_emb", readRotation(spark, path))
-    val probedCells = Similarity.ivfPqProbe(q, model, nProbe)
-      .select(col("cell")).distinct().collect().map(_.getInt(0)).sorted
-    val enc = servableCodes(spark, path)
-      .where(col("cell").isin(probedCells.map(Int.box): _*))
-    Similarity.ivfPqServe(q, enc, rerankVecs(spark, path, probedCells),
-      model, nProbe, k, shortlist)
-  }
-
-  /** [[queryFiltered]] on the int8 tier: the production serve path
-    * ([[queryInt8]] — no raw-corpus access) with a metadata keep-set
-    * pre-filtering the pruned code scan before the ADC shortlist. The
-    * rerank reads the tier's dequantized vectors for shortlisted (hence
-    * already-eligible) ids only. */
-  def queryFilteredInt8(spark: SparkSession, path: String,
-                        queries: DataFrame, keepIds: DataFrame, nProbe: Int,
-                        k: Int, shortlist: Int): DataFrame = {
-    val model = readModel(spark, path)
-    val q = rotate(queries, "q_emb", readRotation(spark, path))
-    val probedCells = Similarity.ivfPqProbe(q, model, nProbe)
-      .select(col("cell")).distinct().collect().map(_.getInt(0)).sorted
-    val keep = keepIds
-      .select(col("cand_id").cast("long").as("cand_id")).distinct()
-    val enc = servableCodes(spark, path)
-      .where(col("cell").isin(probedCells.map(Int.box): _*))
-      .join(broadcast(keep), Seq("cand_id"), "left_semi")
-    Similarity.ivfPqServe(q, enc, rerankVecs(spark, path, probedCells),
-      model, nProbe, k, shortlist)
-  }
-
   /** The rerank tier's candidates for the probed cells, DEQUANTIZED to the
     * q184 audit's exact IEEE spelling (lo + q·(hi−lo)/255, per-dim [lo, hi]
-    * as kilobyte driver literals) — the shared rerank side of [[queryInt8]]
-    * and [[decontaminateInt8]]. Partition-pruned to `probedCells`; for an
-    * OPQ store the values are already rotated (the space every serve-side
-    * dot is computed in). */
+    * as kilobyte driver literals) — the [[Int8]] rerank side of [[serve]].
+    * Partition-pruned to `probedCells`; for an OPQ store the values are
+    * already rotated (the space every serve-side dot is computed in). */
   private def rerankVecs(spark: SparkSession, path: String,
                          probedCells: Array[Int]): DataFrame = {
     // refuse a tier from another model generation: its (cell, release)
@@ -674,16 +650,10 @@ object IndexStore {
     // scan below would silently drop shortlisted candidates. This window
     // exists only when a rebalance committed its swap and crashed before
     // the tier rebuild — VectorRelease.maintain heals it on rerun.
-    rerankGeneration(spark, path).foreach { g =>
-      val cur = generation(spark, path)
-      require(g == cur,
-        s"int8 rerank tier was built under model generation $g but the " +
-          s"store is at generation $cur — rebuild it (IndexStore." +
-          "buildRerank on the residents, or rerun VectorRelease.maintain)")
-    }
-    val stats = readRerankStats(spark, path)
-      .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
-      .sortBy(_._1)
+    val stats = frozenRerankStats(spark, path, (g, cur) =>
+      s"int8 rerank tier was built under model generation $g but the " +
+        s"store is at generation $cur — rebuild it (IndexStore." +
+        "buildRerank on the residents, or rerun VectorRelease.maintain)")
     // single array literals (codegen references): every store's dequantize
     // plan shares one compiled stage (the Similarity.litVec reasoning)
     val loArr = Similarity.litVec(stats.map(_._2))
@@ -710,55 +680,13 @@ object IndexStore {
     * matches' ADC top-`shortlist` is missed — size `shortlist` to the
     * expected per-eval contamination count (the standard recall/cost dial
     * every ADC serving path has). Zero training jobs; work scales with the
-    * probed population, exactly like [[query]]. */
+    * probed population, exactly like [[serve]]. */
   def decontaminate(spark: SparkSession, path: String, evals: DataFrame,
                     fullVecs: DataFrame, nProbe: Int, shortlist: Int,
                     threshold: Double): DataFrame =
-    decontaminateWith(spark, path, evals, fullVecs, nProbe, shortlist,
-      threshold, None)
-
-  /** [[decontaminate]] with an optionally preloaded [[StoreMeta]]. */
-  private[pipeline] def decontaminateWith(spark: SparkSession, path: String,
-                                          evals: DataFrame,
-                                          fullVecs: DataFrame, nProbe: Int,
-                                          shortlist: Int, threshold: Double,
-                                          meta: Option[StoreMeta]): DataFrame = {
-    val m = meta.getOrElse(readMeta(spark, path))
-    val model = m.model
-    val rot = m.rotation
-    val ev = rotate(evals, "q_emb", rot)
-    val fv = rotate(fullVecs, "cand_emb", rot)
-    val probedCells = Similarity.ivfPqProbe(ev, model, nProbe)
-      .select(col("cell")).distinct().collect().map(_.getInt(0)).sorted
-    val enc = servableCodes(spark, path)
-      .where(col("cell").isin(probedCells.map(Int.box): _*))
-    Similarity.dropListFromMatches(
-      Similarity.ivfPqServe(ev, enc, fv, model, nProbe,
-        k = shortlist, shortlist = shortlist),
+    Similarity.dropListFromMatches(serve(spark, path, evals,
+      ServeSpec(Raw(fullVecs)), nProbe, k = shortlist, shortlist = shortlist),
       threshold)
-  }
-
-  /** [[decontaminate]] served ENTIRELY from the store: the exact-rerank
-    * pass reads the int8 tier's dequantized vectors ([[rerankVecs]])
-    * instead of an external raw-vector corpus — the [[queryInt8]] move
-    * applied to the decontamination path, removing its last raw-corpus
-    * dependency (at 100 TB the drop-list job's dominant scan). Both scans
-    * partition-prune to the evals' probed cells; the recall delta of the
-    * dequantized ranking is exactly what the q184 audit bounds. */
-  def decontaminateInt8(spark: SparkSession, path: String, evals: DataFrame,
-                        nProbe: Int, shortlist: Int,
-                        threshold: Double): DataFrame = {
-    val model = readModel(spark, path)
-    val ev = rotate(evals, "q_emb", readRotation(spark, path))
-    val probedCells = Similarity.ivfPqProbe(ev, model, nProbe)
-      .select(col("cell")).distinct().collect().map(_.getInt(0)).sorted
-    val enc = servableCodes(spark, path)
-      .where(col("cell").isin(probedCells.map(Int.box): _*))
-    Similarity.dropListFromMatches(
-      Similarity.ivfPqServe(ev, enc, rerankVecs(spark, path, probedCells),
-        model, nProbe, k = shortlist, shortlist = shortlist),
-      threshold)
-  }
 
   /** Mutual-kNN graph served FROM the frozen index — the 100 TB shape of
     * the graph build: every encoded vector probes its cells, ADC-scores
@@ -769,7 +697,12 @@ object IndexStore {
     * pass is the plain cell-keyed equi-join of
     * [[graft.operators.Similarity.ivfPqGraphEdges]]. Zero training jobs;
     * work = Σ_cell probing-nodes × resident codes, the graph's inherent
-    * cost under the frozen quantizer. */
+    * cost under the frozen quantizer.
+    *
+    * On executor loss: the edge list is localCheckpointed eagerly, so its
+    * blocks live only in executor storage and have no lineage. A lost block
+    * fails the action that reads the returned frame; nothing is written
+    * here, so the store is untouched — re-run the call. */
   def knnGraph(spark: SparkSession, path: String, nodes: DataFrame,
                fullVecs: DataFrame, nProbe: Int, k: Int,
                shortlist: Int): DataFrame = {
@@ -876,9 +809,9 @@ object IndexStore {
   /** TOMBSTONE a set of resident ids — the takedown / right-to-be-forgotten
     * verb of the store lifecycle. A delete is a METADATA write: the ids join
     * the persisted tombstone list (`path/tombstones`, id-only parquet) and
-    * every serving read ([[query]], [[queryFiltered]], [[queryAsOf]],
-    * [[queryInt8]], [[queryFilteredInt8]], [[decontaminate]],
-    * [[decontaminateInt8]], [[knnGraph]]) excludes them from the pruned code
+    * every serving read (the [[serve]] kernel — every [[ServeSpec]], and
+    * [[query]], [[queryFiltered]] and [[decontaminate]] over it — and
+    * [[knnGraph]]) excludes them from the pruned code
     * scan BEFORE the ADC shortlist — so k still fills from eligible
     * candidates and no tombstoned id can appear in any answer, at the cost
     * of one broadcast anti-join. Physical reclamation is deferred to
@@ -1312,6 +1245,12 @@ object IndexStore {
         rotate(vectors.select(col(idCol), col(embCol)), embCol, newRot),
         idCol, embCol, model)
       .join(relMap, Seq("cand_id"), "right")
+      // the guard relies on two optimizer behaviours: Catalyst does not
+      // push `cell IS NOT NULL` below this CollectMetrics node, and does
+      // not turn the right join into an inner join through it. Either
+      // rewrite would hide the uncovered rows from the count; the
+      // IndexStoreSpec case "rebalance refuses a partial vectors frame
+      // instead of shrinking the store" trips if a Spark upgrade does so.
       .observe(guard,
         count(when(col("cell").isNull, lit(1))).as("uncovered"))
       .where(col("cell").isNotNull)

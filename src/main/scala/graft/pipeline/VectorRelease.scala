@@ -157,8 +157,10 @@ object VectorRelease {
 
     // 3. eval drop list served FROM the just-appended index — which
     //    rotates its own inputs, so it gets the RAW candidates
-    val drops = IndexStore.decontaminateWith(spark, path, evals,
-      candsRaw(union), p.nProbe, p.shortlist, p.threshold, Some(meta))
+    val drops = Similarity.dropListFromMatches(IndexStore.serve(spark, path,
+      evals, IndexStore.ServeSpec(IndexStore.Raw(candsRaw(union))),
+      p.nProbe, k = p.shortlist, shortlist = p.shortlist, meta = Some(meta)),
+      p.threshold)
 
     // one frame pinning all three artifacts: edge rows + the source's
     // release (from the store's own codes) + its drop status

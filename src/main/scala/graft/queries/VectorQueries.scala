@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Retrieval, Similarity}
+import graft.pipeline.IndexStore.{Int8, Raw, ServeSpec}
 import graft.sources.Tables
 
 /** Vector-similarity queries over the `embeddings` table (`Array[Float]`,
@@ -454,8 +455,8 @@ object VectorQueries {
           col("embedding").cast("array<double>").as("q_emb"))
       val keep = emb.where(col("label") % 2 === 0)
         .select(col("vec_id").cast("long").as("cand_id"))
-      graft.pipeline.IndexStore.queryFilteredInt8(s, path, qd, keep,
-        nProbe = 2, k = 5, shortlist = 100)
+      graft.pipeline.IndexStore.serve(s, path, qd,
+        ServeSpec(Int8, keep = Some(keep)), nProbe = 2, k = 5, shortlist = 100)
     }),
 
     // PQ distortion audit: per-subspace quantized squared reconstruction
@@ -482,7 +483,8 @@ object VectorQueries {
           col("embedding").cast("array<double>").as("q_emb"))
       val fv = emb.select(col("vec_id").cast("long").as("cand_id"),
         col("embedding").cast("array<double>").as("cand_emb"))
-      graft.pipeline.IndexStore.queryAsOf(s, path, qd, fv, Seq("r1"),
+      graft.pipeline.IndexStore.serve(s, path, qd,
+        ServeSpec(Raw(fv), releases = Some(Seq("r1"))),
         nProbe = 2, k = 5, shortlist = 100)
     }),
 
@@ -549,10 +551,12 @@ object VectorQueries {
           col("embedding").cast("array<double>").as("q_emb"))
       val fv = emb.select(col("vec_id").cast("long").as("cand_id"),
         col("embedding").cast("array<double>").as("cand_emb"))
-      val oldS = graft.pipeline.IndexStore.queryAsOf(s, path, qd, fv,
-        Seq("r1"), nProbe = 2, k = 5, shortlist = 100)
-      val newS = graft.pipeline.IndexStore.queryAsOf(s, path, qd, fv,
-        Seq("r1", "r2"), nProbe = 2, k = 5, shortlist = 100)
+      def asOf(releases: String*): DataFrame =
+        graft.pipeline.IndexStore.serve(s, path, qd,
+          ServeSpec(Raw(fv), releases = Some(releases)),
+          nProbe = 2, k = 5, shortlist = 100)
+      val oldS = asOf("r1")
+      val newS = asOf("r1", "r2")
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("q_id")).orderBy(col("score").desc, col("cand_id"))
       val top1Old = oldS.withColumn("rn", row_number().over(w))
@@ -1092,7 +1096,7 @@ object VectorQueries {
       val qd = emb.where(col("vec_id") % 50 === 0)
         .select(col("vec_id").cast("long").as("q_id"),
           col("embedding").cast("array<double>").as("q_emb"))
-      graft.pipeline.IndexStore.queryInt8(s, path, qd,
+      graft.pipeline.IndexStore.serve(s, path, qd, ServeSpec(Int8),
         nProbe = 2, k = 5, shortlist = 100)
     }),
 
@@ -1519,7 +1523,7 @@ object VectorQueries {
     // rerank reads the store's int8 tier (dequantized per the frozen
     // per-dim stats over the residents) instead of the raw float corpus —
     // the q188 move applied to the drop-list path
-    // (IndexStore.decontaminateInt8). At 100 TB this removes the
+    // (IndexStore.serve with the Int8 rerank). At 100 TB this removes the
     // decontamination job's dominant scan: the raw-vector side. The tier
     // is additive, so it piggybacks on q156's shared store.
     "q190_int8_decontaminate" -> ((s, dir) => {
@@ -1538,8 +1542,9 @@ object VectorQueries {
       val evals = emb.where(isEval)
         .select(col("vec_id").cast("long").as("q_id"),
           col("embedding").cast("array<double>").as("q_emb"))
-      graft.pipeline.IndexStore.decontaminateInt8(s, path, evals,
-        nProbe = 2, shortlist = 100, threshold = 0.3)
+      Similarity.dropListFromMatches(graft.pipeline.IndexStore.serve(s, path,
+        evals, ServeSpec(Int8), nProbe = 2, k = 100, shortlist = 100),
+        threshold = 0.3)
     }),
 
     // Embedding-space eval-set decontamination: eval = vec_id % 50 == 0,

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Parquet/CSV/JSON sources over the driver test data (SURVEY.md §2.1).
+/** Parquet sources over the driver test data (SURVEY.md §2.1).
   *
   * The reference reads nested JSON (`db_etl/etl.py:1374-1383`), parquet chunks
   * (`chunk_etl_retriever/retriever.py:97-99`), CSV lookups (`db_etl/etl.py:1146-1151`)
@@ -19,14 +19,6 @@ object Tables {
   /** S3: parquet source with automatic column pruning/pushdown. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
-
-  /** S5: CSV lookup source (header row, schema inferred or supplied). */
-  def loadCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "true").csv(path)
-
-  /** S1: multi-line nested JSON source (reference main release file). */
-  def loadJson(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("multiLine", "true").json(path)
 
   /** The events table with its nanosecond timestamp normalized to Spark's
     * TimestampType (micros). Requires `spark.sql.legacy.parquet.nanosAsLong`
@@ -54,11 +46,4 @@ object Tables {
       .select(col("l_suppkey"), to_date(col("l_shipdate")).as("date"), col("l_quantity"))
       .groupBy("l_suppkey", "date")
       .agg(sum("l_quantity").cast("double").as("qty"))
-
-  /** Daily spend per customer (sparser series; used for fill/ffill operators). */
-  def customerDaily(spark: SparkSession, sfDir: String): DataFrame =
-    load(spark, sfDir, "orders")
-      .select(col("o_custkey"), to_date(col("o_orderdate")).as("date"), col("o_totalprice"))
-      .groupBy("o_custkey", "date")
-      .agg(round(sum("o_totalprice"), 2).as("spend"))
 }

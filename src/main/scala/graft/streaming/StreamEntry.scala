@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming front-end (SURVEY.md §2.10). The reference is a
@@ -146,10 +146,6 @@ object StreamEntry {
     StructField("doc_id", LongType), StructField("text", StringType),
     StructField("lang", StringType), StructField("source", StringType),
     StructField("n_chars", LongType)))
-
-  /** File-source stream over a landing directory of document drops. */
-  def readDocs(spark: SparkSession, landingDir: String): DataFrame =
-    spark.readStream.schema(docSchema).parquet(landingDir)
 
   /** Streaming corpus ingest into the persisted signature store — the
     * LLM-ops twin of the EAV `foreachBatch` upsert path: each micro-batch of
@@ -570,14 +566,4 @@ object StreamEntry {
         graft.operators.Classifier.scoreExpr(col("text"), weights)
           .as("margin_micro"))
       .withColumn("pred", col("margin_micro") > 0)
-
-  /** Run a streaming query to completion over whatever is already in the
-    * landing dir (memory sink) — the local smoke-test harness. */
-  def runOnce(spark: SparkSession, df: DataFrame, name: String): StreamingQuery = {
-    val q = df.writeStream.outputMode(OutputMode.Complete)
-      .format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    q.processAllAvailable()
-    q
-  }
 }

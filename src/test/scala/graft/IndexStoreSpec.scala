@@ -1,12 +1,16 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
 import graft.pipeline.IndexStore
+import graft.pipeline.IndexStore.{Int8, Raw, ServeSpec}
 import graft.sources.Tables
 
 /** The persisted IVFADC index: q146 verifies the frozen-disk SERVE answer
@@ -110,15 +114,16 @@ class IndexStoreSpec extends SparkSpec {
     build(dir, emb)
     IndexStore.buildRerank(spark, dir, fullVecs)
     val allIds = emb.select(col("vec_id").cast("long").as("cand_id"))
-    val plain = IndexStore.queryInt8(spark, dir, queriesDf,
+    val plain = IndexStore.serve(spark, dir, queriesDf, ServeSpec(Int8),
       nProbe = 2, k = 5, shortlist = 100)
-    val allKeep = IndexStore.queryFilteredInt8(spark, dir, queriesDf,
-      allIds, nProbe = 2, k = 5, shortlist = 100)
+    val allKeep = IndexStore.serve(spark, dir, queriesDf,
+      ServeSpec(Int8, keep = Some(allIds)), nProbe = 2, k = 5, shortlist = 100)
     assert(allKeep.exceptAll(plain).isEmpty && plain.exceptAll(allKeep).isEmpty)
     val keep = emb.where(col("label") % 2 === 0)
       .select(col("vec_id").cast("long").as("cand_id"))
-    val got = IndexStore.queryFilteredInt8(spark, dir, queriesDf, keep,
-      nProbe = 2, k = 5, shortlist = 100).cache()
+    val got = IndexStore.serve(spark, dir, queriesDf,
+      ServeSpec(Int8, keep = Some(keep)), nProbe = 2, k = 5,
+      shortlist = 100).cache()
     // no excluded candidate leaks, and the half-corpus filter still fills k
     val leaked = got.join(emb.where(col("label") % 2 =!= 0)
       .select(col("vec_id").cast("long").as("cand_id")), Seq("cand_id"))
@@ -126,6 +131,44 @@ class IndexStoreSpec extends SparkSpec {
     import spark.implicits._
     val perQuery = got.groupBy("q_id").count().select("count").as[Long].collect()
     assert(perQuery.nonEmpty && perQuery.forall(_ == 5L))
+  }
+
+  test("serve's eager build runs a fixed number of Spark jobs per shape") {
+    val dir = Files.createTempDirectory("ivfadc_jobs").toString + "/index"
+    build(dir, emb)
+    IndexStore.buildRerank(spark, dir, fullVecs)
+    val keep = emb.where(col("label") % 2 === 0)
+      .select(col("vec_id").cast("long").as("cand_id"))
+    def jobsStarted(body: => DataFrame): Int = {
+      val n = new AtomicInteger()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          n.incrementAndGet()
+      }
+      ListenerBusDrain.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try { body; ListenerBusDrain.drain(spark.sparkContext) }
+      finally spark.sparkContext.removeSparkListener(listener)
+      n.get
+    }
+    def serve(spec: ServeSpec): DataFrame =
+      IndexStore.serve(spark, dir, queriesDf, spec, nProbe = 2, k = 5,
+        shortlist = 100)
+    // building the frame runs only the metadata reads and the probed-cell
+    // collect; int8 adds one rerank-stats read (schema inference plus one
+    // collect) and the tier's schema inference. The serve itself runs at
+    // the caller's action.
+    val shapes = Seq[(String, () => DataFrame, Int)](
+      ("raw", () => serve(ServeSpec(Raw(fullVecs))), 8),
+      ("raw+keep", () => serve(ServeSpec(Raw(fullVecs), keep = Some(keep))), 8),
+      ("raw+releases", () =>
+        serve(ServeSpec(Raw(fullVecs), releases = Some(Seq("r1")))), 8),
+      ("int8", () => serve(ServeSpec(Int8)), 11),
+      ("int8+keep", () => serve(ServeSpec(Int8, keep = Some(keep))), 11),
+      ("decontaminate", () => IndexStore.decontaminate(spark, dir, queriesDf,
+        fullVecs, nProbe = 2, shortlist = 100, threshold = 0.3), 8))
+    val counts = shapes.map { case (name, df, _) => name -> jobsStarted(df()) }
+    assert(counts === shapes.map { case (name, _, n) => name -> n })
   }
 
   test("queryAsOf: r1-restricted serve is bit-identical to the pre-append answer") {
@@ -136,13 +179,15 @@ class IndexStoreSpec extends SparkSpec {
     val before = IndexStore.query(spark, dir, queriesDf, fullVecs,
       nProbe = 2, k = 5, shortlist = 100).collect()
     IndexStore.append(spark, dir, emb.where(!isOld), "vec_id", "embedding", "r2")
-    val asOf = IndexStore.queryAsOf(spark, dir, queriesDf, fullVecs,
-      Seq("r1"), nProbe = 2, k = 5, shortlist = 100).collect()
+    val asOf = IndexStore.serve(spark, dir, queriesDf,
+      ServeSpec(Raw(fullVecs), releases = Some(Seq("r1"))),
+      nProbe = 2, k = 5, shortlist = 100).collect()
     assert(asOf.toSet === before.toSet,
       "appending r2 must not change the r1 as-of answer")
     // the full release set serves exactly like the unrestricted query
-    val both = IndexStore.queryAsOf(spark, dir, queriesDf, fullVecs,
-      Seq("r1", "r2"), nProbe = 2, k = 5, shortlist = 100)
+    val both = IndexStore.serve(spark, dir, queriesDf,
+      ServeSpec(Raw(fullVecs), releases = Some(Seq("r1", "r2"))),
+      nProbe = 2, k = 5, shortlist = 100)
     val plain = IndexStore.query(spark, dir, queriesDf, fullVecs,
       nProbe = 2, k = 5, shortlist = 100)
     assert(both.exceptAll(plain).isEmpty && plain.exceptAll(both).isEmpty)
@@ -378,7 +423,7 @@ class IndexStoreSpec extends SparkSpec {
     def serveBoth(): (Set[org.apache.spark.sql.Row], Set[org.apache.spark.sql.Row]) = (
       IndexStore.query(spark, dir, queriesDf, fullVecs,
         nProbe = 2, k = 5, shortlist = 100).collect().toSet,
-      IndexStore.queryInt8(spark, dir, queriesDf,
+      IndexStore.serve(spark, dir, queriesDf, ServeSpec(Int8),
         nProbe = 2, k = 5, shortlist = 100).collect().toSet)
 
     val before = partFiles("codes")
@@ -431,13 +476,14 @@ class IndexStoreSpec extends SparkSpec {
     out.write("1".getBytes(java.nio.charset.StandardCharsets.UTF_8))
     out.close()
     val e1 = intercept[IllegalArgumentException] {
-      IndexStore.queryInt8(spark, dir, queriesDf,
+      IndexStore.serve(spark, dir, queriesDf, ServeSpec(Int8),
         nProbe = 2, k = 5, shortlist = 100).collect()
     }
     assert(e1.getMessage.contains("generation"))
     val e2 = intercept[IllegalArgumentException] {
-      IndexStore.decontaminateInt8(spark, dir, queriesDf,
-        nProbe = 2, shortlist = 100, threshold = 0.3).collect()
+      Similarity.dropListFromMatches(IndexStore.serve(spark, dir, queriesDf,
+        ServeSpec(Int8), nProbe = 2, k = 100, shortlist = 100),
+        threshold = 0.3).collect()
     }
     assert(e2.getMessage.contains("generation"))
     // appending under another epoch's frozen stats is refused too
@@ -448,7 +494,7 @@ class IndexStoreSpec extends SparkSpec {
     // the documented fix re-stamps the tier and serving resumes
     IndexStore.buildRerank(spark, dir, fullVecs)
     assert(IndexStore.rerankGeneration(spark, dir) === Some(1L))
-    assert(IndexStore.queryInt8(spark, dir, queriesDf,
+    assert(IndexStore.serve(spark, dir, queriesDf, ServeSpec(Int8),
       nProbe = 2, k = 5, shortlist = 100).count() > 0)
   }
 
@@ -461,14 +507,14 @@ class IndexStoreSpec extends SparkSpec {
     IndexStore.buildRerank(spark, dir, fullVecs)
     IndexStore.rebalance(spark, dir, emb, "vec_id", "embedding",
       kCoarse = 8, coarseIters = 4, pqIters = 3)
-    val served = IndexStore.queryInt8(spark, dir, queriesDf,
+    val served = IndexStore.serve(spark, dir, queriesDf, ServeSpec(Int8),
       nProbe = 2, k = 5, shortlist = 100)
     // a fresh kc8 store with a fresh tier is the converged target
     val dirF = Files.createTempDirectory("ivfadc_rebtF").toString + "/index"
     build(dirF, emb, kCoarse = 8)
     IndexStore.buildRerank(spark, dirF, fullVecs)
-    val freshServe = IndexStore.queryInt8(spark, dirF, queriesDf,
-      nProbe = 2, k = 5, shortlist = 100)
+    val freshServe = IndexStore.serve(spark, dirF, queriesDf,
+      ServeSpec(Int8), nProbe = 2, k = 5, shortlist = 100)
     assert(served.count() > 0)
     assert(served.exceptAll(freshServe).isEmpty &&
       freshServe.exceptAll(served).isEmpty)
@@ -535,7 +581,7 @@ class IndexStoreSpec extends SparkSpec {
     val dir = Files.createTempDirectory("ivfadc_i8").toString + "/index"
     build(dir, emb)
     IndexStore.buildRerank(spark, dir, fullVecs)
-    val served = IndexStore.queryInt8(spark, dir, queriesDf,
+    val served = IndexStore.serve(spark, dir, queriesDf, ServeSpec(Int8),
       nProbe = 2, k = 5, shortlist = 100)
     // inline twin: the q184 dequantization construction feeding ivfPqServe
     def dequantOf(df: DataFrame): DataFrame = {
@@ -563,17 +609,18 @@ class IndexStoreSpec extends SparkSpec {
     // the whole point of the (cell, release) rerank layout: BOTH the ADC
     // code scan and the int8 rerank scan carry literal cell partition
     // filters — two nonempty PartitionFilters lists in one plan
-    val plan = IndexStore.queryInt8(spark, dir,
-        queriesDf.orderBy("q_id").limit(1), nProbe = 2, k = 5,
-        shortlist = 100)
+    val plan = IndexStore.serve(spark, dir,
+        queriesDf.orderBy("q_id").limit(1), ServeSpec(Int8), nProbe = 2,
+        k = 5, shortlist = 100)
       .queryExecution.executedPlan.toString
     val nPruned = "PartitionFilters: \\[[^\\]]".r.findAllIn(plan).size
     assert(nPruned >= 2, s"expected 2 pruned scans, got $nPruned in:\n$plan")
 
     // int8-served decontamination ≡ the float path fed the dequantized
     // candidates inline (the q190 kernel)
-    val dropsI8 = IndexStore.decontaminateInt8(spark, dir, queriesDf,
-      nProbe = 2, shortlist = 100, threshold = 0.3)
+    val dropsI8 = Similarity.dropListFromMatches(IndexStore.serve(spark, dir,
+      queriesDf, ServeSpec(Int8), nProbe = 2, k = 100, shortlist = 100),
+      threshold = 0.3)
     val dropsInline = IndexStore.decontaminate(spark, dir, queriesDf,
       dequantOf(fullVecs), nProbe = 2, shortlist = 100, threshold = 0.3)
     assert(dropsI8.exceptAll(dropsInline).isEmpty &&
@@ -586,7 +633,7 @@ class IndexStoreSpec extends SparkSpec {
       dim = 64, kCoarse = 8, coarseIters = 4, m = 16, ksub = 8, iters = 3,
       release = "r1", opq = true)
     IndexStore.buildRerank(spark, dirO, fullVecs)
-    val servedO = IndexStore.queryInt8(spark, dirO, queriesDf,
+    val servedO = IndexStore.serve(spark, dirO, queriesDf, ServeSpec(Int8),
       nProbe = 2, k = 5, shortlist = 100)
     val w = IndexStore.readRotation(spark, dirO).get
     val fvRot = Similarity.householderRotate(fullVecs, "cand_emb", w)
@@ -653,7 +700,7 @@ class IndexStoreSpec extends SparkSpec {
             round((v - lo) / ((hi - lo) / lit(255d))).cast("long"))))
         lo + q.cast("double") * ((hi - lo) / lit(255.0))
       }).as("cand_emb"))
-    val served = IndexStore.queryInt8(spark, dir, queriesDf,
+    val served = IndexStore.serve(spark, dir, queriesDf, ServeSpec(Int8),
       nProbe = 2, k = 5, shortlist = 100)
     val inline = Similarity.ivfPqServe(queriesDf,
       IndexStore.readCodes(spark, dir), dq, IndexStore.readModel(spark, dir),
@@ -868,7 +915,7 @@ class IndexStoreSpec extends SparkSpec {
       nProbe = 2, k = 5, shortlist = 100)
     assert(served.exceptAll(manual).isEmpty && manual.exceptAll(served).isEmpty)
     // the int8 tier and the decontamination path exclude too
-    val i8 = IndexStore.queryInt8(spark, dir, queriesDf,
+    val i8 = IndexStore.serve(spark, dir, queriesDf, ServeSpec(Int8),
       nProbe = 2, k = 5, shortlist = 100)
     assert(i8.join(broadcast(tomb), Seq("cand_id")).isEmpty)
     val dropped = IndexStore.decontaminate(spark, dir, queriesDf, fullVecs,

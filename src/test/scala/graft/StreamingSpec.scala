@@ -772,9 +772,10 @@ class StreamingSpec extends SparkSpec {
         "embedding", rel)
       graft.pipeline.IndexStore.appendRerank(spark, twin, cands(d), rel)
     }
-    val s8 = graft.pipeline.IndexStore.queryInt8(spark, idx, evals,
+    val int8 = graft.pipeline.IndexStore.ServeSpec(graft.pipeline.IndexStore.Int8)
+    val s8 = graft.pipeline.IndexStore.serve(spark, idx, evals, int8,
       nProbe = 2, k = 5, shortlist = 100)
-    val t8 = graft.pipeline.IndexStore.queryInt8(spark, twin, evals,
+    val t8 = graft.pipeline.IndexStore.serve(spark, twin, evals, int8,
       nProbe = 2, k = 5, shortlist = 100)
     assert(s8.count() > 0)
     assert(s8.exceptAll(t8).isEmpty && t8.exceptAll(s8).isEmpty,

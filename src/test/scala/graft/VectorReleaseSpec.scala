@@ -542,8 +542,9 @@ class VectorReleaseSpec extends SparkSpec {
       fresh, old, nodes(emb.where(isEval)), priorOf(idx),
       "vec_id", "embedding", release = "r2",
       kCoarse = 8, maxShareMilli = 300).localCheckpoint()
-    def int8Serve(idx: String): DataFrame = IndexStore.queryInt8(spark, idx,
-      nodes(emb.where(isEval)), nProbe = 2, k = 5, shortlist = 100)
+    def int8Serve(idx: String): DataFrame = IndexStore.serve(spark, idx,
+      nodes(emb.where(isEval)), IndexStore.ServeSpec(IndexStore.Int8),
+      nProbe = 2, k = 5, shortlist = 100)
 
     // healthy night: the delta appends under FROZEN stats — stats unchanged,
     // tier covers the union, release-partitioned
@@ -656,8 +657,9 @@ class VectorReleaseSpec extends SparkSpec {
       === wBefore.get.toSeq,
       "heal must retrain the rotation to the fresh-build answer")
     assert(sameRows(dOut, hOut), "healed OPQ night must equal the healthy one")
-    def int8Serve(idx: String): DataFrame = IndexStore.queryInt8(spark, idx,
-      nodes(emb.where(isEval)), nProbe = 2, k = 5, shortlist = 100)
+    def int8Serve(idx: String): DataFrame = IndexStore.serve(spark, idx,
+      nodes(emb.where(isEval)), IndexStore.ServeSpec(IndexStore.Int8),
+      nProbe = 2, k = 5, shortlist = 100)
     val (hServe, dServe) = (int8Serve(hIdx), int8Serve(dIdx))
     assert(hServe.count() > 0)
     assert(dServe.exceptAll(hServe).isEmpty && hServe.exceptAll(dServe).isEmpty)

@@ -729,8 +729,8 @@ def py_q188_int8_index_serve(con, spark_df, oracle):
     """Int8-rerank frozen-index serving: the q145 IVFADC chain with the
     exact rerank taken against q82-spelling DEQUANTIZED candidates — per-dim
     [lo, hi] over the resident corpus, q = HALF_UP((v−lo)/((hi−lo)/255)),
-    v' = lo + q·(hi−lo)/255 — exactly what IndexStore.queryInt8 reads from
-    the store's rerank tier."""
+    v' = lo + q·(hi−lo)/255 — exactly what IndexStore.serve's Int8 rerank
+    reads from the store's rerank tier."""
     ids, vecs = _embeddings(con)
     dim = len(vecs[0])
     lo = [min(v[i] for v in vecs) for i in range(dim)]
@@ -751,7 +751,7 @@ def py_q188_int8_index_serve(con, spark_df, oracle):
 def py_q199_filtered_int8_serve(con, spark_df, oracle):
     """Filtered serving on the int8 tier: the q188 dequantized-rerank chain
     with the q195 keep set (label % 2 == 0) applied pre-shortlist — exactly
-    IndexStore.queryFilteredInt8."""
+    IndexStore.serve with ServeSpec(Int8, keep)."""
     ids, vecs = _embeddings(con)
     keep = {r[0] for r in con.execute(
         "SELECT vec_id FROM embeddings WHERE label % 2 = 0").fetchall()}
@@ -820,7 +820,7 @@ def py_q190_int8_decontaminate(con, spark_df, oracle):
     exact rerank dots each shortlisted candidate's q82-spelling DEQUANTIZED
     vector (per-dim [lo, hi] over the CORPUS residents — the store's rerank
     tier covers exactly its residents) instead of the raw float — what
-    IndexStore.decontaminateInt8 reads from the tier."""
+    IndexStore.serve's Int8 rerank reads from the tier."""
     return spark_df, _index_decontaminate(con, dequant=True)
 
 
