@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis scalar operators for training-data pipelines: token counting,
-  * quality scoring, document fingerprinting. All pure column
-  * expressions (codegen'd) — no UDFs in the hot path.
+  * quality scoring, document fingerprinting. All pure column expressions
+  * (codegen'd) — no UDFs in the hot path.
   */
 object TextAnalysis {
 
