@@ -102,25 +102,30 @@ object Bench {
             .mkString("{", ",", "}")}}""")
       }
     }
-    val lineOf: String => String = qmap =>
+    // `queries_inlined` counts the entries of the inline map, so a parser
+    // can tell the fit mode's heaviest-first subset from the full map that
+    // `queries_md5` hashes
+    def lineOf(qmap: String, inlined: Int): String =
       s"""{"metric":"total","value":${d3(total)},"unit":"sec",""" +
-        s""""queries":$qmap,"n_queries":${results.size},"n_failed":$nFailed,""" +
-        s""""queries_md5":"$qsMd5","detail":"$artifact","sf":"$sfDir"}"""
-    val inlined = qmapMode match {
-      case "none" => "{}"
-      case "full" => qs
+        s""""queries":$qmap,"queries_inlined":$inlined,"n_queries":${results.size},""" +
+        s""""n_failed":$nFailed,"queries_md5":"$qsMd5","detail":"$artifact","sf":"$sfDir"}"""
+    val (inlined, nInlined) = qmapMode match {
+      case "none" => ("{}", 0)
+      case "full" => (qs, results.size)
       case _ => // heaviest-first greedy fill under the line budget
-        val room = 1900 - lineOf("{}").length
+        // (the count's width is bounded by the full map's)
+        val room = 1900 - lineOf("{}", results.size).length
         val acc = new StringBuilder
+        var n = 0
         results.sortBy(-_._2).foreach { kv =>
           val e = entry(kv)
           if (acc.length + e.length + 1 <= room) {
-            if (acc.nonEmpty) acc.append(','); acc.append(e)
+            if (acc.nonEmpty) acc.append(','); acc.append(e); n += 1
           }
         }
-        s"{$acc}"
+        (s"{$acc}", n)
     }
-    println(lineOf(inlined))
+    println(lineOf(inlined, nInlined))
     // Attribution for the store-MUTATING queries whose in-harness fixture
     // builds (prior index/graph/degenerate store — PERSISTED state in
     // production) cannot share the frozen read-only fixture: the artifact

@@ -1,22 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: prints the formatted physical plan of selected queries so
   * shuffle counts, broadcast choices, pushed filters and codegen spans can be
-  * audited (`runMain graft.Explain [queryName ...]`). */
+  * audited (`runMain graft.Explain [queryName ...]`), under the session
+  * config Bench and Verify run with. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.create()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.HashFunctions.register(spark)
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q04_rolling_sum_7d", "q21_star_join", "q48_cosine_topk", "q51_eav_pipeline")
     names.foreach { n =>

@@ -2,10 +2,16 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one local-session builder every main (Bench/BenchSome/Explain/Soak/
-  * Verify) shares — five hand-copied builder blocks had already started to
-  * drift, and a config added to only some of them silently runs benchmarks
-  * and validation under different sessions. */
+/** The one session builder: every main, the specs and the benchmark
+  * harness run under this config — hand-copied builder blocks had already
+  * drifted, and a config added to only some of them silently runs
+  * benchmarks, plan assertions and validation under different sessions.
+  *
+  * The graft functions and optimizer rules come from [[plans.GraftExtensions]]
+  * at build time, so this session and every `newSession()` of it resolve
+  * them; no query path registers anything itself. The warehouse is a fresh
+  * temporary directory: a stale location from an earlier run would make
+  * `saveAsTable` refuse table names the in-memory catalog forgot. */
 object LocalSession {
   def create(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -22,16 +28,19 @@ object LocalSession {
     // packs more small files per split (fewer tasks, the desirable
     // direction). Env-overridable for A/B and cluster tuning.
     val openCost = sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", (16 * 1024).toString)
+    val warehouse = java.nio.file.Files.createTempDirectory("graft-warehouse").toFile
+    warehouse.deleteOnExit()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.files.openCostInBytes", openCost)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.warehouse.dir", warehouse.toString)
       .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.HashFunctions.register(spark)
     spark
   }
 }

@@ -94,8 +94,8 @@ object BloomSketch {
   def deserialize(bytes: Array[Byte]): BloomFilter =
     BloomFilter.readFrom(new ByteArrayInputStream(bytes))
 
-  /** Column API ([[HashFunctions.register]] required on the session, as
-    * for every graft function). */
+  /** Column API (the session must be built with `GraftExtensions`, as for
+    * every graft function). */
   def mightContain(value: Column, sketch: Array[Byte]): Column =
     call_function("graft_bloom_contains", value, lit(sketch))
 }

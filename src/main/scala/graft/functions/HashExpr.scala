@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.{call_function, lit}
@@ -59,10 +59,8 @@ case class Blake2bHexExpr(first: Expression, second: Expression, third: Expressi
 
 object HashFunctions {
 
-  @volatile private var registered: Set[SparkSession] = Set.empty
-
-  /** The one builder per function — shared verbatim by this registry path
-    * and GraftExtensions, so the two registration routes cannot drift. */
+  /** The one builder per function, which [[graft.plans.GraftExtensions]]
+    * installs into every session at build time. */
   private[graft] val builders: Map[String, Seq[Expression] => Expression] = Map(
     "blake2s_hex" -> (exprs => Blake2sHexExpr(
       Cast(exprs(0), BinaryType), Cast(exprs(1), BinaryType),
@@ -77,26 +75,9 @@ object HashFunctions {
     "graft_nfkc" -> (exprs => NormalizeExpr(Cast(exprs(0), StringType), "NFKC")),
     "graft_bloom_contains" -> (exprs => HashFunctions.buildBloomContains(exprs)))
 
-  /** Register the graft function surface for SQL / `expr()` /
-    * `call_function` use on an already-built session. */
-  def register(spark: SparkSession): Unit = synchronized {
-    if (!registered(spark)) {
-      builders.foreach { case (name, build) =>
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          name, build, "scala_udf")
-      }
-      // The extensions path injects this at build time; for an already-built
-      // session the experimental hook is the sanctioned equivalent.
-      if (!spark.experimental.extraOptimizations.contains(graft.plans.RewriteDotProduct)) {
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.RewriteDotProduct
-      }
-      registered += spark
-    }
-  }
-
   /** Column API: keyed BLAKE2s hex of a string/binary column. The session the
-    * resulting plan is analyzed under must have called `register`. */
+    * resulting plan is analyzed under must be built with
+    * [[graft.plans.GraftExtensions]], as every [[graft.LocalSession]] is. */
   def blake2sHex(data: Column, key: String, digestSize: Int): Column =
     call_function("blake2s_hex", data, lit(key), lit(digestSize))
 

@@ -59,14 +59,13 @@ object Dedup {
     * minima in ONE pass over the base-hash array (the composed form below
     * materializes a transformed array per slot per row). Coefficients are
     * the same seed-fixed sequence — signatures are identical (MinHashSpec).
-    * The session must have the graft functions registered
-    * (`HashFunctions.register` / `GraftExtensions`). */
+    * The session must be built with `GraftExtensions`, as every
+    * [[graft.LocalSession]] is. */
   def minhashFromHashes(baseHashes: Column, numHashes: Int): Column =
     call_function("graft_minhash", baseHashes, lit(numHashes), lit(0x5eed))
 
-  /** The composed higher-order-function form of [[minhashFromHashes]] —
-    * registration-free fallback and the semantic reference the native
-    * expression is tested against. Coefficients come from the SAME shared
+  /** The composed higher-order-function form of [[minhashFromHashes]] — the
+    * semantic reference the native expression is tested against. Coefficients come from the SAME shared
     * generator, so the two forms cannot drift. */
   def minhashFromHashesHof(baseHashes: Column, numHashes: Int): Column = {
     val (as, bs) = graft.functions.MinHashCoefs.generate(numHashes, 0x5eed)

@@ -20,8 +20,8 @@ object Similarity {
     * [[graft.functions.DotProductExpr]] — zero-allocation loop over both
     * array buffers, same index-order double accumulation as the composed
     * higher-order form (equivalence guarded by DotProductSpec). The session
-    * the plan is analyzed under must have the graft functions registered
-    * (`HashFunctions.register` or `GraftExtensions`). */
+    * the plan is analyzed under must be built with `GraftExtensions`, as
+    * every [[graft.LocalSession]] is. */
   def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
   /** Model constants (centroids, codebooks, weights, selected vectors) as
@@ -80,9 +80,9 @@ object Similarity {
           * 1e6 + 0.5).cast("long")))
   }
 
-  /** The composed higher-order-function form of [[dot]] — kept as the
-    * registration-free fallback and the semantic reference the native
-    * expression is tested against. */
+  /** The composed higher-order-function form of [[dot]] — the semantic
+    * reference the native expression is tested against (RewriteDotProduct
+    * rewrites this exact idiom to the native form). */
   def dotHof(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0d), (acc, v) => acc + v)
@@ -94,8 +94,8 @@ object Similarity {
   def adcSum(codes: Column, parts: Column): Column =
     call_function("graft_adc", codes, parts)
 
-  /** The composed higher-order-function ADC form — the registration-free
-    * fallback and the semantic reference [[adcSum]] is tested against. */
+  /** The composed higher-order-function ADC form — the semantic reference
+    * [[adcSum]] is tested against. */
   def adcSumHof(codes: Column, parts: Column): Column =
     aggregate(zip_with(codes, parts, (c, p) => element_at(p, c + 1)),
       lit(0L), (acc, x) => acc + x)

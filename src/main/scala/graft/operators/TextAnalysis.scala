@@ -181,25 +181,6 @@ object TextAnalysis {
       .agg((sum(col("__c")).cast("double") / 1e6).as("score"))
   }
 
-  /** One counting step of byte-pair-encoding vocabulary induction (Sennrich
-    * et al. 2016, "Neural Machine Translation of Rare Words with Subword
-    * Units"): the corpus-wide frequency of every adjacent character pair,
-    * sliced to the top-`k` merge candidates — the statistic the BPE trainer
-    * recomputes per merge round. Counting runs over word *occurrences*,
-    * which equals the classic word-frequency-weighted formulation folded
-    * into a single pass (Σ_word freq(word)·pairs(word) = Σ_occurrence
-    * pairs(occurrence)).
-    *
-    * Scale shape: explode is map-side; the only shuffle is the pair-keyed
-    * aggregation, whose key space is bounded by alphabet² — map-side partial
-    * aggregation collapses the corpus to at most that many rows per
-    * partition before the wire — and the top-k is an ordered slice
-    * (TakeOrderedAndProject), never a global sort. Counts are integers and
-    * (count desc, pair asc) is a total order, so the slice is deterministic
-    * under any partitioning.
-    *
-    * The len ≥ 2 filter is load-bearing on the Spark side: `sequence(1,
-    * len-1)` with len = 1 would be `sequence(1, 0)`, which descends. */
   /** Per-document n-gram novelty of a new release against the prior corpus:
     * for every document matching `isNew`, the count and exact-permille
     * fraction of its distinct n-grams absent from the old slice's gram set —
@@ -300,6 +281,25 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_hits"))
   }
 
+  /** One counting step of byte-pair-encoding vocabulary induction (Sennrich
+    * et al. 2016, "Neural Machine Translation of Rare Words with Subword
+    * Units"): the corpus-wide frequency of every adjacent character pair,
+    * sliced to the top-`k` merge candidates — the statistic the BPE trainer
+    * recomputes per merge round. Counting runs over word *occurrences*,
+    * which equals the classic word-frequency-weighted formulation folded
+    * into a single pass (Σ_word freq(word)·pairs(word) = Σ_occurrence
+    * pairs(occurrence)).
+    *
+    * Scale shape: explode is map-side; the only shuffle is the pair-keyed
+    * aggregation, whose key space is bounded by alphabet² — map-side partial
+    * aggregation collapses the corpus to at most that many rows per
+    * partition before the wire — and the top-k is an ordered slice
+    * (TakeOrderedAndProject), never a global sort. Counts are integers and
+    * (count desc, pair asc) is a total order, so the slice is deterministic
+    * under any partitioning.
+    *
+    * The len ≥ 2 filter is load-bearing on the Spark side: `sequence(1,
+    * len-1)` with len = 1 would be `sequence(1, 0)`, which descends. */
   def bpeMergePairs(df: DataFrame, textCol: String, k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     val words = df.select(explode(tokens(col(textCol))).as("word"))

@@ -82,93 +82,33 @@ object GramStore {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("release")
         .parquet(path)
-      writeSketch(spark, path, release, novel)
+      ReleasePartitions.writeSketch(spark, s"$path/$SketchDir", release, novel)
     }
   }
 
-  /** Per-release kilobyte GRAM SKETCHES — the gram-store twin of
-    * [[IndexStore.readIdSketches]]: a [[graft.functions.BloomSketch]] of
-    * each partition's stored `gram_h`s, under `_sketch/` (underscore-
-    * prefixed, so [[read]]'s partition discovery never sees it). They
-    * serve one caller — [[ReleaseBuild.rollForwardOnDisk]]'s gram-layout
-    * audit, which must prove the night's freshly written margin is new to
-    * the store; sketches make that proof O(delta) on a clean night, with
-    * the column-pruned scan of the hit releases as the fallback.
+  /** Per-release kilobyte GRAM SKETCHES — the
+    * [[ReleasePartitions.writeSketch]] sidecar of each partition's stored
+    * `gram_h`s, under `_sketch/` (underscore-prefixed, so [[read]]'s
+    * partition discovery never sees it). They serve one caller —
+    * [[ReleaseBuild.rollForwardOnDisk]]'s gram-layout audit, which must
+    * prove the night's freshly written margin is new to the store.
     *
-    * Same superset invariant as the index store's: [[append]] REBUILDS a
-    * partition wholesale and rebuilds its sketch with it (the only path
-    * that adds grams), [[vacuum]] drops sketch and partition together, so
-    * a sketch is always exactly its partition's gram set — a sketch-less
-    * release (pre-sketch store) is conservatively a hit. */
+    * [[append]] REBUILDS a partition wholesale and rebuilds its sketch with
+    * it (the only path that adds grams), [[vacuum]] drops sketch and
+    * partition together, so a sketch is always exactly its partition's
+    * gram set — a sketch-less release (pre-sketch store) is conservatively
+    * a hit. */
   private val SketchDir = "_sketch"
 
-  private def writeSketch(spark: SparkSession, path: String, release: String,
-                          novel: DataFrame): Unit = {
-    import spark.implicits._
-    val bytes = graft.functions.BloomSketch.build(novel, "gram_h",
-      novel.count())
-    Seq((bytes, release)).toDF("sketch", "release")
-      .coalesce(1).write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("release").parquet(s"$path/$SketchDir")
-  }
-
-  /** Every persisted release sketch, keyed by release name. A sketch dir
-    * left EMPTY by a vacuum (all partitions dropped) reads as no sketches,
-    * not a schema-inference failure. */
-  def readSketches(spark: SparkSession, path: String): Map[String, Array[Byte]] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/$SketchDir")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p) || !fs.listStatus(p).exists(s =>
-        s.isDirectory && s.getPath.getName.startsWith("release="))) Map.empty
-    else {
-      spark.catalog.refreshByPath(s"$path/$SketchDir")
-      spark.read.parquet(s"$path/$SketchDir")
-        .select(col("release").cast("string"), col("sketch"))
-        .collect()
-        .map(r => r.getString(0) -> r.getAs[Array[Byte]]("sketch")).toMap
-    }
-  }
+  def readSketches(spark: SparkSession, path: String): Map[String, Array[Byte]] =
+    ReleasePartitions.readSketches(spark, s"$path/$SketchDir")
 
   /** The releases (excluding `exclude`) that MIGHT hold any of
-    * `deltaGrams`' hashes — [[IndexStore.sketchHitReleases]]' contract on
-    * the gram store: one map pass over the delta against every sketched
-    * release at once; empty = proof of a clean layout, a listed release =
-    * scan it (possible false positive); sketch-less releases always
-    * listed. */
+    * `deltaGrams`' hashes ([[ReleasePartitions.sketchHitReleases]]). */
   def sketchHitReleases(spark: SparkSession, path: String,
-                        deltaGrams: DataFrame, exclude: String): Seq[String] = {
-    val priors = listReleases(spark, path).filterNot(_ == exclude)
-    if (priors.isEmpty) return Seq.empty
-    val sketches = readSketches(spark, path) - exclude
-    val (sketched, unsketched) = priors.partition(sketches.contains)
-    val hits =
-      if (sketched.isEmpty) Seq.empty[String]
-      else if (sketched.map(sketches(_).length.toLong).sum > (64L << 20))
-        sketched // plan-literal budget: skip the consult, keep the scan
-      else {
-        graft.functions.HashFunctions.register(spark)
-        val g = col(deltaGrams.columns.head).cast("long")
-        val aggs = sketched.zipWithIndex.map { case (r, i) =>
-          max(when(graft.functions.BloomSketch.mightContain(
-            g, sketches(r)), 1L).otherwise(0L)).as(s"__h$i")
-        }
-        val row = deltaGrams.agg(aggs.head, aggs.tail: _*).collect()(0)
-        sketched.zipWithIndex.collect {
-          case (r, i) if !row.isNullAt(i) && row.getLong(i) == 1L => r
-        }
-      }
-    (hits ++ unsketched).sorted
-  }
-
-  private def listReleases(spark: SparkSession, path: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("release="))
-      .map(_.getPath.getName.stripPrefix("release="))
-  }
+                        deltaGrams: DataFrame, exclude: String): Seq[String] =
+    ReleasePartitions.sketchHitReleases(spark, s"$path/$SketchDir",
+      ReleasePartitions.releases(spark, path).filterNot(_ == exclude), deltaGrams)
 
   /** The persisted store — (gram_h long, release string). A NONEXISTENT
     * path reads as an EMPTY frame of that schema, because [[append]]
@@ -210,12 +150,8 @@ object GramStore {
     * its `_TAKEDOWN_PENDING` marker here before the restore that writes
     * the first partition — and such a marker-only directory must still
     * read as the empty store, not fail parquet schema inference. */
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists(s =>
-      s.isDirectory && s.getPath.getName.startsWith("release="))
-  }
+  private def exists(spark: SparkSession, path: String): Boolean =
+    ReleasePartitions.releases(spark, path).nonEmpty
 
   /** Per-document novelty of a candidate slice against the store — the
     * incremental form of `TextAnalysis.gramNovelty` (same integer-permille

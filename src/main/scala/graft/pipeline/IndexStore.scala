@@ -232,16 +232,14 @@ object IndexStore {
         newVecs.select(col(idCol).cast("long").as("cand_id")))
     }
 
-  /** Per-release kilobyte ID SKETCHES — a [[graft.functions.BloomSketch]]
-    * of each release partition's stored `cand_id`s, persisted beside the
-    * quantizer metadata. They exist for ONE caller: the nightly
-    * delta-newness audit ([[VectorRelease.maintain]] step b), which must
-    * prove the night's delta ids are new to the store. Without sketches
-    * that proof is a column-pruned scan of every prior release's id column
-    * — the last per-night cost that grows with the RESIDENT STORE rather
-    * than the delta at 100 TB. With them, a clean night reads kilobytes of
-    * sketch + one map pass over the delta, and the scan survives only as
-    * the on-hit fallback ([[sketchHitReleases]]).
+  /** Per-release kilobyte ID SKETCHES — the
+    * [[ReleasePartitions.writeSketch]] sidecar of each release partition's
+    * stored `cand_id`s, persisted beside the quantizer metadata. They exist
+    * for ONE caller: the nightly delta-newness audit
+    * ([[VectorRelease.maintain]] step b), which must prove the night's
+    * delta ids are new to the store without scanning every prior release's
+    * id column — the last per-night cost that grows with the RESIDENT
+    * STORE rather than the delta.
     *
     * Maintenance invariant (the correctness condition): a release's sketch
     * is always a SUPERSET of its stored ids. Every path that ADDS ids to a
@@ -254,74 +252,19 @@ object IndexStore {
   private val IdSketchDir = "meta/idsketch"
 
   private def writeIdSketch(spark: SparkSession, path: String,
-                            release: String, ids: DataFrame): Unit = {
-    import spark.implicits._
-    val bytes = graft.functions.BloomSketch.build(ids, ids.columns.head,
-      ids.count())
-    Seq((bytes, release)).toDF("sketch", "release")
-      .coalesce(1).write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("release").parquet(s"$path/$IdSketchDir")
-  }
+                            release: String, ids: DataFrame): Unit =
+    ReleasePartitions.writeSketch(spark, s"$path/$IdSketchDir", release, ids)
 
-  /** Every persisted release sketch, keyed by release name — kilobytes per
-    * release, driver-collected like the rest of the store metadata. A
-    * sketch dir left EMPTY by a vacuum reads as no sketches, not a
-    * schema-inference failure. */
-  def readIdSketches(spark: SparkSession, path: String): Map[String, Array[Byte]] = {
-    val fs = fsOf(spark, path)
-    val dir = new org.apache.hadoop.fs.Path(s"$path/$IdSketchDir")
-    if (!fs.exists(dir) || !fs.listStatus(dir).exists(s =>
-        s.isDirectory && s.getPath.getName.startsWith("release=")))
-      Map.empty
-    else {
-      spark.catalog.refreshByPath(s"$path/$IdSketchDir")
-      spark.read.parquet(s"$path/$IdSketchDir")
-        .select(col("release").cast("string"), col("sketch"))
-        .collect()
-        .map(r => r.getString(0) -> r.getAs[Array[Byte]]("sketch")).toMap
-    }
-  }
+  def readIdSketches(spark: SparkSession, path: String): Map[String, Array[Byte]] =
+    ReleasePartitions.readSketches(spark, s"$path/$IdSketchDir")
 
-  /** The prior releases that MIGHT share an id with `deltaIds` — the
-    * sketch consult that makes a clean night's dup audit O(delta). One map
-    * pass over the delta evaluates every sketched release's
-    * might-contain aggregate at once (sketch bytes ride the plan as
-    * literals); releases without a sketch are returned unconditionally
-    * (the conservative fallback). Empty result = proof of no duplicate
-    * (Bloom `false` is definitive); a listed release = "scan it" — a hit
-    * may be a false positive, never the reverse. When the combined sketch
-    * bytes exceed [[SketchPlanBudgetBytes]] the consult is skipped and all
-    * prior releases are returned — the pre-sketch behavior, rather than a
-    * plan bloated with hundreds of MB of literals. */
+  /** The prior releases that MIGHT share an id with `deltaIds`
+    * ([[ReleasePartitions.sketchHitReleases]]) — the sketch consult that
+    * makes a clean night's dup audit O(delta). */
   def sketchHitReleases(spark: SparkSession, path: String,
-                        deltaIds: DataFrame, exclude: String): Seq[String] = {
-    val priors = listCodeReleases(spark, path).filterNot(_ == exclude)
-    if (priors.isEmpty) return Seq.empty
-    val sketches = readIdSketches(spark, path) - exclude
-    val (sketched, unsketched) = priors.partition(sketches.contains)
-    val hits =
-      if (sketched.isEmpty) Seq.empty[String]
-      else if (sketched.map(sketches(_).length.toLong).sum > SketchPlanBudgetBytes)
-        sketched
-      else {
-        graft.functions.HashFunctions.register(spark)
-        val idCol = col(deltaIds.columns.head).cast("long")
-        val aggs = sketched.zipWithIndex.map { case (r, i) =>
-          max(when(graft.functions.BloomSketch.mightContain(
-            idCol, sketches(r)), 1L).otherwise(0L)).as(s"__h$i")
-        }
-        val row = deltaIds.agg(aggs.head, aggs.tail: _*).collect()(0)
-        // an empty delta aggregates to nulls: no rows, no possible hit
-        sketched.zipWithIndex.collect {
-          case (r, i) if !row.isNullAt(i) && row.getLong(i) == 1L => r
-        }
-      }
-    (hits ++ unsketched).sorted
-  }
-
-  /** Ceiling on sketch bytes a single consult may embed as plan literals. */
-  private val SketchPlanBudgetBytes = 64L << 20
+                        deltaIds: DataFrame, exclude: String): Seq[String] =
+    ReleasePartitions.sketchHitReleases(spark, s"$path/$IdSketchDir",
+      listCodeReleases(spark, path).filterNot(_ == exclude), deltaIds)
 
   /** The index store's AUDIT CLOCK ([[StoreAudit.readAuditClock]]) lives
     * at the store ROOT — NOT under `meta/`, which a rebalance swap

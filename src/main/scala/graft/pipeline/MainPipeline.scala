@@ -51,7 +51,6 @@ object MainPipeline {
   }
 
   def run(spark: SparkSession, sfDir: String, releaseId: Int = 1): DataFrame = {
-    HashFunctions.register(spark)
     val keys = Seq("areaType", "areaCode")
     val daily = Tables.supplierDaily(spark, sfDir)
       .select(lit("supplier").as("areaType"),

@@ -24,7 +24,6 @@ import graft.sources.Tables
 object MsoaPipeline {
 
   def run(spark: SparkSession, sfDir: String, releaseId: Int = 1): DataFrame = {
-    HashFunctions.register(spark)
     val keys = Seq("areaCode")
     val metric = "cases"
 

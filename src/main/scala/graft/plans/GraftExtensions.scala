@@ -6,24 +6,17 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 import graft.functions.HashFunctions
 
-/** SparkSessionExtensions entry point: installs the graft function surface
-  * into any session at build time —
-  *
-  * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)   // or
-  *   .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-  * }}}
-  *
-  * This is the deployment-grade registration path (cluster-wide via config,
-  * no per-session imperative setup); `HashFunctions.register` remains the
-  * ad-hoc equivalent for an already-built session.
+/** The one registration path for the graft function surface and optimizer
+  * rules: installed when a session is built, so the session and every
+  * `newSession()` of it resolve the functions and run the rules inside the
+  * operator-optimization batches. [[graft.LocalSession]] builds with it; a
+  * cluster deployment sets
+  * `spark.sql.extensions=graft.plans.GraftExtensions` instead. A session
+  * built without it cannot analyze plans that call the graft functions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // one shared builder map — this path and HashFunctions.register cannot
-    // drift apart
     HashFunctions.builders.foreach { case (name, build) =>
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo("graft.functions", name),

@@ -59,7 +59,6 @@ object MiscQueries {
     // Keyed BLAKE2s row hash — rows-only (no BLAKE2 in DuckDB); RFC vectors
     // asserted in ScalaTest.
     "q35_blake2s_hash" -> ((s, dir) => {
-      HashFunctions.register(s)
       Tables.load(s, dir, "documents").select(col("doc_id"),
         HashFunctions.blake2sHex(col("text"), MainPipeline.RecordKey, 12).as("row_hash"))
     }),
@@ -254,7 +253,6 @@ object MiscQueries {
     // BLAKE2b slug (private_report/process.py:124-127) — rows-only; RFC
     // vectors asserted in ScalaTest.
     "q63_blake2b_slug" -> ((s, dir) => {
-      HashFunctions.register(s)
       Tables.load(s, dir, "documents").select(col("doc_id"),
         HashFunctions.blake2bHex(col("text"), "", 32).as("slug"))
     }),

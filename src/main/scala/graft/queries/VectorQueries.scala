@@ -767,7 +767,7 @@ object VectorQueries {
     // reference's orchestrator, where one release id drives every
     // downstream artifact, now including index maintenance. Python oracle:
     // the q140 SQL chain (run in DuckDB — gate q189 together with q140 in
-    // partial VerifySome runs) anti-joined with the q180 from-scratch drop
+    // partial Verify runs) anti-joined with the q180 from-scratch drop
     // set. The final gate is a broadcast anti-join (the drop list is
     // eval-bounded).
     "q189_maintained_release" -> ((s, dir) => {
@@ -813,7 +813,7 @@ object VectorQueries {
     // the tombstones realized, and the q189 cross-tier gate at the end.
     // No taken-down document can reach the manifest through EITHER tier.
     // Python oracle: q205's SQL manifest (gate q206 together with
-    // q205_doc_takedown in partial VerifySome runs) anti-joined with the
+    // q205_doc_takedown in partial Verify runs) anti-joined with the
     // q204-style from-scratch union drop set restricted to the servable
     // (% 9 != 2) corpus.
     "q206_unified_takedown" -> ((s, dir) => {

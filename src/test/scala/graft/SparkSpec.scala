@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites: one local SparkSession per JVM. */
+/** Shared session for all suites: one [[LocalSession]] per JVM, so specs and
+  * plan assertions run under the config Bench, Verify and the benchmark
+  * harness use. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf: String = "/root/testdata/sf0.001"
@@ -11,20 +13,8 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // fresh per-JVM warehouse: a stale location from a previous run would
-      // make CTAS refuse managed-table names the in-memory catalog forgot
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = LocalSession.create()
     s.sparkContext.setLogLevel("ERROR")
-    graft.functions.HashFunctions.register(s)
     s
   }
 }

@@ -1,6 +1,8 @@
 #!/usr/bin/env python3
 """Local pre-validation of SparkEntry oracles: run DuckDB on oracle_sql.json
-against the same parquet tables, compare to the Spark outputs Verify dumped.
+against the same parquet tables, compare to the Spark outputs Verify dumped
+(`runMain graft.Verify <sfDir> <outDir> [query ...]`; with named queries the
+dump also writes names.json and only those queries are checked).
 
 Usage: python3 tools/check.py <sfDir> <outDir>
 """
@@ -1336,7 +1338,7 @@ def py_q186_index_maintain(con, spark_df, oracle):
 def py_q206_unified_takedown(con, spark_df, oracle):
     """Unified cross-tier takedown: q205's SQL manifest (the text tier's
     post-takedown roll-forward, executed in DuckDB — gate q206 together
-    with q205_doc_takedown in partial VerifySome runs) anti-joined with
+    with q205_doc_takedown in partial Verify runs) anti-joined with
     the vector tier's drop set from the q180 from-scratch union build
     restricted to the servable (vec_id % 9 != 2) corpus — the q204
     takedown kernel under q205's takedown id set."""
@@ -1353,7 +1355,7 @@ def py_q206_unified_takedown(con, spark_df, oracle):
 def py_q189_maintained_release(con, spark_df, oracle):
     """Maintained cross-tier nightly release: the q140 text-tier SQL chain
     (executed in DuckDB — its SQL must ride along, so gate q189 together
-    with q140 in partial VerifySome runs) anti-joined with the vector
+    with q140 in partial Verify runs) anti-joined with the vector
     tier's drop set from the q180 from-scratch union build (maintain on
     the healthy fixture ≡ q180's roll-forward; q186 pins the degenerate
     branch separately)."""
@@ -1687,9 +1689,9 @@ def main(sf_dir, out_dir):
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    # VerifySome dumps a SUBSET and records it in names.json; restrict every
-    # loop to that set so a partial gate can pass (a full Verify dump writes
-    # no names.json and checks everything, as before)
+    # Verify with named queries dumps a SUBSET and records it in names.json;
+    # restrict every loop to that set so a partial gate can pass (a full
+    # Verify dump writes no names.json and checks everything)
     names_path = f"{out_dir}/names.json"
     requested = set(json.load(open(names_path))) if os.path.exists(names_path) else None
     if requested is not None:
