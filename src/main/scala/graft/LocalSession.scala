@@ -13,6 +13,20 @@ import org.apache.spark.sql.SparkSession
   * temporary directory: a stale location from an earlier run would make
   * `saveAsTable` refuse table names the in-memory catalog forgot. */
 object LocalSession {
+
+  /** A fresh directory under the system temp directory, deleted with
+    * everything under it when the JVM exits: the session's warehouse and
+    * the fixture stores a run builds or clones. (`deleteOnExit` alone
+    * removes only empty directories.) */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs.add(dir.toFile)
+    dir
+  }
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  sys.addShutdownHook(tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d)))
+
   def create(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Scan-parallelism floor (guide: spark.sql.files.minPartitionNum /
@@ -28,8 +42,7 @@ object LocalSession {
     // packs more small files per split (fewer tasks, the desirable
     // direction). Env-overridable for A/B and cluster tuning.
     val openCost = sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", (16 * 1024).toString)
-    val warehouse = java.nio.file.Files.createTempDirectory("graft-warehouse").toFile
-    warehouse.deleteOnExit()
+    val warehouse = tempDir("graft-warehouse")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

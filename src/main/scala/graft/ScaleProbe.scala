@@ -216,7 +216,9 @@ object ScaleProbe {
     // same job shape so the two runs scan comparable file layouts — timing
     // the 1× side against the source file's original (possibly single-file)
     // layout would hand the big side extra scan parallelism for free.
-    val tmp = java.nio.file.Files.createTempDirectory("scaleprobe").toString
+    // the temp corpus is factor× the documents table: deleted at exit, also
+    // after a mid-probe failure, so orphaned GBs never accumulate across runs
+    val tmp = LocalSession.tempDir("scaleprobe").toString
     try {
       src.write.mode("overwrite").parquet(s"$tmp/docs_1x")
       val docs = spark.read.parquet(s"$tmp/docs_1x")
@@ -865,13 +867,6 @@ object ScaleProbe {
       if (only.isEmpty)
         java.nio.file.Files.write(java.nio.file.Paths.get("SCALE_PROBE.json"),
           (line + "\n").getBytes("UTF-8"))
-    } finally {
-      spark.stop()
-      // the temp corpus is factor× the documents table — leaving it behind
-      // (e.g. after a mid-probe failure) accumulates orphaned GBs across runs
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(tmp)).iterator().asScala
-        .toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    } finally spark.stop()
   }
 }

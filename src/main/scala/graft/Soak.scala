@@ -12,8 +12,7 @@ import graft.pipeline.{EavStore, MainPipeline}
 object Soak {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val store = args.lift(1).getOrElse(
-      java.nio.file.Files.createTempDirectory("eav_soak").toString + "/store")
+    val store = args.lift(1).getOrElse(LocalSession.tempDir("eav_soak").toString + "/store")
     val spark = LocalSession.create()
 
     def timed[T](label: String)(f: => T): T = {

@@ -1,7 +1,11 @@
 package graft.pipeline
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Dedup
@@ -20,13 +24,32 @@ import graft.operators.Dedup
   * partitions, metadata only; (2) pin the release once and merge in stored
   * rows only for partitions it overlaps; (3) one (partition_id, hash bucket)
   * exchange serves both the dedup window and the write's file clustering.
+  *
+  * The store records its own shape, as the reference declares its table's
+  * columns once in DDL: the caller picks the columns (MainPipeline writes
+  * 8, with a `date` date; a streaming sink may write 4, with a string
+  * `date`), and [[read]] scans with that record instead of inferring a
+  * schema from a file footer, which costs a Spark job per read.
+  *   - Format: `<path>/_schema.json` ([[SchemaFile]]) holds the upserted
+  *     frame's schema as Spark's JSON schema (`StructType.json`), with
+  *     every field, array element and map value nullable and no field
+  *     metadata: the shape Spark writes its parquet files in. The leading
+  *     underscore hides it from Spark's file listing; the `.json` ending
+  *     keeps it out of any glob over the `.parquet` data files.
+  *   - Write order: the first [[upsert]] into a store writes the record
+  *     (to a temporary name, then renamed) before any data file.
+  *   - Mismatch rule: an upsert whose schema, nullability aside, differs
+  *     from the record fails before it writes anything; so does an upsert
+  *     into a store that holds data but no record. There is no inference
+  *     fallback: [[read]] of a store without its record fails.
   */
 object EavStore {
 
   /** S9/S10: idempotent upsert. Duplicate (hash, partition_id) rows in `df`
     * keep the earliest `date` (reference `uploader.py:308-312`), incoming rows
     * replace stored ones on the same key, and only `df`'s partitions are
-    * rewritten. On executor loss:
+    * rewritten. The first upsert records the store's schema; a later one
+    * must match it (see above). On executor loss:
     *   - `df` is persisted MEMORY_AND_DISK once, unless the caller cached it
     *     (only upsert's own pin is unpersisted). A lost block is recomputed
     *     from `df`'s lineage, so `df` must not read the partitions it replaces.
@@ -36,6 +59,15 @@ object EavStore {
     *     it was (dynamic overwrite swaps partitions at commit); re-run it. */
   def upsert(spark: SparkSession, df: DataFrame, path: String): Unit = {
     val stored = partitionDirs(spark, path).map(d => partitionValue(d.getName)).toSet
+    val shape = nullable(df.schema).asInstanceOf[StructType]
+    recordedSchema(spark, path) match {
+      case Some(rec) => require(rec == shape,
+        s"upsert into $path: input schema (${shape.toDDL}) differs from " +
+          s"the store's recorded schema (${rec.toDDL})")
+      case None =>
+        require(stored.isEmpty, s"$path holds data but no $SchemaFile record")
+        writeSchema(spark, path, shape)
+    }
     val pin = stored.nonEmpty && df.storageLevel == StorageLevel.NONE
     if (pin) df.persist(StorageLevel.MEMORY_AND_DISK)
     try {
@@ -68,8 +100,44 @@ object EavStore {
     * P × FilesPerPartition writer tasks. */
   val FilesPerPartition = 16
 
+  /** The store's rows, scanned with its recorded schema: one small file
+    * read on the driver, no Spark job. */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(recordedSchema(spark, path).getOrElse(
+      throw new IllegalStateException(
+        s"$path has no $SchemaFile record: not a store written by upsert")))
+      .parquet(path)
+
+  /** The schema record's file name under the store root. */
+  val SchemaFile = "_schema.json"
+
+  private def recordedSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val in = try Some(hadoopFs(spark, path).open(new Path(path, SchemaFile)))
+      catch { case _: java.io.FileNotFoundException => None }
+    in.map { s =>
+      try DataType.fromJson(new String(s.readAllBytes(), UTF_8)).asInstanceOf[StructType]
+      finally s.close()
+    }
+  }
+
+  /** Written under a temporary name and renamed, so a crash mid-write
+    * leaves no partial record. */
+  private def writeSchema(spark: SparkSession, path: String, schema: StructType): Unit = {
+    val fs = hadoopFs(spark, path)
+    val tmp = new Path(path, s"$SchemaFile.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(schema.prettyJson.getBytes(UTF_8)) finally out.close()
+    require(fs.rename(tmp, new Path(path, SchemaFile)), s"failed to record $path/$SchemaFile")
+  }
+
+  /** `t` with every field, array element and map value nullable and no
+    * field metadata. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f => StructField(f.name, nullable(f.dataType))))
+    case a: ArrayType => ArrayType(nullable(a.elementType))
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType))
+    case other => other
+  }
 
   /** Small-file compaction — the maintenance pass a long-lived partitioned
     * store needs: repeated upserts each add up to [[FilesPerPartition]]
@@ -132,12 +200,10 @@ object EavStore {
       .partitionBy("partition_id").parquet(path)
 
   private def hadoopFs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def partitionDirs(spark: SparkSession,
-                            path: String): Seq[org.apache.hadoop.fs.Path] = {
-    val p = new org.apache.hadoop.fs.Path(path)
+  private def partitionDirs(spark: SparkSession, path: String): Seq[Path] = {
+    val p = new Path(path)
     val fs = hadoopFs(spark, path)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.Similarity
 import graft.operators.Similarity.IvfPqModel
@@ -30,6 +31,12 @@ import graft.operators.Similarity.IvfPqModel
   *     — the scan never lists, let alone reads, unprobed cells' files;
   *     partitioning by `release` makes appends idempotent dynamic overwrites
   *     of exactly their own partitions (the S9/S10 contract).
+  *   - `tombstones` — (cand_id long): the takedown list ([[delete]]).
+  * The serve path reads these five tables with the schemas declared beside
+  * their writers ([[CentroidsSchema]], [[CodebooksSchema]],
+  * [[RotationSchema]], [[CodesSchema]], [[TombstoneSchema]]), so no serve
+  * runs a schema-inference job; IndexStoreSpec checks every file a build,
+  * append, delete and rebalance write against them.
   *
   * Lifecycle:
   *   - [[build]]: train quantizers on the seed corpus, encode it, persist
@@ -107,11 +114,14 @@ object IndexStore {
   def readRotation(spark: SparkSession, path: String): Option[Array[Double]] = {
     val fs = fsOf(spark, path)
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/meta/rotation"))) None
-    else Some(spark.read.parquet(s"$path/meta/rotation")
+    else Some(spark.read.schema(RotationSchema).parquet(s"$path/meta/rotation")
       .select(col("i").cast("int"), col("w").cast("double"))
       .collect().map(r => r.getInt(0) -> r.getDouble(1))
       .sortBy(_._1).map(_._2))
   }
+
+  /** The shape [[writeRotation]] writes and [[readRotation]] reads. */
+  val RotationSchema: StructType = StructType.fromDDL("i INT, w DOUBLE")
 
   /** Persist (or clear) the rotation under `metaPath` — None must DELETE a
     * leftover file so a plain rebuild over an OPQ store cannot serve
@@ -180,8 +190,7 @@ object IndexStore {
       s"$tag|$idCol|$embCol|$dim|$kCoarse|$coarseIters|$m|$ksub|$iters|" +
         s"$release|$opq|$opqIters",
       _ => {
-        val path = java.nio.file.Files
-          .createTempDirectory("graft-shared-index").toString
+        val path = graft.LocalSession.tempDir("graft-shared-index").toString
         build(spark, path, df, idCol, embCol, dim, kCoarse, coarseIters,
           m, ksub, iters, release, opq, opqIters)
         path
@@ -798,6 +807,10 @@ object IndexStore {
 
   private val TombDir = "tombstones"
 
+  /** The shape [[delete]] and [[clearTombstones]] write and the tombstone
+    * reads read. */
+  val TombstoneSchema: StructType = StructType.fromDDL("cand_id BIGINT")
+
   /** The persisted tombstone list — (cand_id long, distinct), None when the
     * store has never had a delete (or the last [[purge]]/[[rebalance]]
     * cleared it). A directory left EMPTY by a clear (id files subtracted,
@@ -816,7 +829,7 @@ object IndexStore {
         .forall(st => !st.isFile || st.getPath.getName.startsWith("_"))) None
     else {
       spark.catalog.refreshByPath(s"$path/$TombDir")
-      Some(spark.read.parquet(s"$path/$TombDir")
+      Some(spark.read.schema(TombstoneSchema).parquet(s"$path/$TombDir")
         .select(col("cand_id").cast("long").as("cand_id")).distinct())
     }
   }
@@ -843,7 +856,8 @@ object IndexStore {
     val oldFiles = fs.listStatus(dir).filter(_.isFile)
       .map(_.getPath).filterNot(_.getName.startsWith("_"))
     if (oldFiles.isEmpty) return
-    val survivors = spark.read.parquet(oldFiles.map(_.toString): _*)
+    val survivors = spark.read.schema(TombstoneSchema)
+      .parquet(oldFiles.map(_.toString): _*)
       .select(col("cand_id").cast("long").as("cand_id")).distinct()
       .join(broadcast(purged
           .select(col("cand_id").cast("long").as("cand_id"))),
@@ -1305,7 +1319,7 @@ object IndexStore {
   /** The persisted code table, schema-normalized: (cand_id, cell int,
     * codes array<int>, release). */
   def readCodes(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/codes")
+    spark.read.schema(CodesSchema).parquet(s"$path/codes")
       .select(col("cand_id").cast("long").as("cand_id"),
         col("cell").cast("int").as("cell"),
         col("codes").cast("array<int>").as("codes"),
@@ -1314,12 +1328,12 @@ object IndexStore {
   /** The frozen quantizers, reassembled from the meta files (one kilobyte
     * driver read; `dim` is inferred from the centroid rows). */
   def readModel(spark: SparkSession, path: String): IvfPqModel = {
-    val cents = spark.read.parquet(s"$path/meta/centroids")
+    val cents = spark.read.schema(CentroidsSchema).parquet(s"$path/meta/centroids")
       .select(col("cell").cast("int"), col("cvec").cast("array<double>"))
       .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
       .sortBy(_._1).map(_._2)
     require(cents.nonEmpty, s"empty centroid table at $path/meta/centroids")
-    val cb = spark.read.parquet(s"$path/meta/codebooks")
+    val cb = spark.read.schema(CodebooksSchema).parquet(s"$path/meta/codebooks")
       .select(col("sub").cast("int"), col("cluster").cast("int"),
         col("cvec").cast("array<double>"))
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
@@ -1327,6 +1341,11 @@ object IndexStore {
       .map(_._2.sortBy(_._2).map(_._3)).toArray
     IvfPqModel(cents.head.length, cents, cb)
   }
+
+  /** The shapes [[writeModel]] writes and [[readModel]] reads. */
+  val CentroidsSchema: StructType = StructType.fromDDL("cell INT, cvec ARRAY<DOUBLE>")
+  val CodebooksSchema: StructType =
+    StructType.fromDDL("sub INT, cluster INT, cvec ARRAY<DOUBLE>")
 
   /** `metaPath` is the meta DIRECTORY (normally `$path/meta`; the rebalance
     * writes its staged copy to `$path/meta.next`). */
@@ -1342,6 +1361,13 @@ object IndexStore {
     }.toSeq.toDF("sub", "cluster", "cvec")
       .coalesce(1).write.mode("overwrite").parquet(s"$metaPath/codebooks")
   }
+
+  /** The shape [[writeCodes]] and [[rebalance]] write and [[readCodes]]
+    * reads: `cand_id` and `codes` in the files, then the `cell` and
+    * `release` partition columns, typed here rather than inferred from the
+    * directory names. */
+  val CodesSchema: StructType =
+    StructType.fromDDL("cand_id BIGINT, codes ARRAY<INT>, cell INT, release STRING")
 
   /** One encode pass → cell/release-partitioned parquet. `dynamic = false`
     * (build) replaces the whole table; `dynamic = true` (append) replaces

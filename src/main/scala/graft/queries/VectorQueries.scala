@@ -64,8 +64,7 @@ object VectorQueries {
       sharedAsOfStores.computeIfAbsent(dir, _ => {
         val emb = Tables.load(s, dir, "embeddings")
         val isOld = col("vec_id") % 10 < 8
-        val path =
-          java.nio.file.Files.createTempDirectory("graft-asof").toString
+        val path = graft.LocalSession.tempDir("graft-asof").toString
         graft.pipeline.IndexStore.build(s, path, emb.where(isOld), "vec_id",
           "embedding", dim = 64, kCoarse = 8, coarseIters = 4, m = 16,
           ksub = 8, iters = 3, release = "r1")
@@ -88,8 +87,7 @@ object VectorQueries {
   private[queries] def sharedFixtureRoot(dir: String, name: String)
                                         (build: String => Unit): String =
     sharedFixtureRoots.computeIfAbsent(s"$dir|$name", _ => {
-      val root =
-        java.nio.file.Files.createTempDirectory(s"graft-$name").toString
+      val root = graft.LocalSession.tempDir(s"graft-$name").toString
       build(root)
       root
     })
@@ -101,14 +99,12 @@ object VectorQueries {
   private def cloneStore(s: SparkSession, root: String): String =
     clonePath(s, s"$root/store")
 
-  /** Filesystem-copy any fixture directory to a fresh temp path — the
-    * [[cloneStore]] idiom generalized (the q201 restore-snapshot-then-
-    * mutate shape) for the text-tier signature/gram stores the takedown
-    * queries mutate. */
+  /** Filesystem-copy any fixture directory to a fresh temp path, deleted
+    * at JVM exit — the [[cloneStore]] idiom generalized (the q201
+    * restore-snapshot-then-mutate shape) for the text-tier signature/gram
+    * stores the takedown queries mutate. */
   private[queries] def clonePath(s: SparkSession, src: String): String = {
-    val dst =
-      java.nio.file.Files.createTempDirectory("graft-clone").toString +
-        "/store"
+    val dst = graft.LocalSession.tempDir("graft-clone").toString + "/store"
     val conf = s.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(src).getFileSystem(conf)
     org.apache.hadoop.fs.FileUtil.copy(fs,
@@ -506,14 +502,7 @@ object VectorQueries {
       // fixture is read-only by contract. The copy is small files (codes +
       // kilobyte meta), not a quantizer retrain.
       val path = timedFixture("q201_tombstone_serve") {
-        val dst = java.nio.file.Files
-          .createTempDirectory("graft-tomb").toString + "/store"
-        val conf = s.sparkContext.hadoopConfiguration
-        val fs = new org.apache.hadoop.fs.Path(src).getFileSystem(conf)
-        org.apache.hadoop.fs.FileUtil.copy(fs,
-          new org.apache.hadoop.fs.Path(src), fs,
-          new org.apache.hadoop.fs.Path(dst), false, conf)
-        dst
+        clonePath(s, src)
       }
       graft.pipeline.IndexStore.delete(s, path,
         emb.where(col("vec_id") % 7 === 3)
@@ -952,13 +941,9 @@ object VectorQueries {
           emb.select(col("vec_id").cast("long").as("cand_id"),
             col("embedding").cast("array<double>").as("cand_emb")))
         // a private clone: the tear and the repair MUTATE the store
-        val dst = java.nio.file.Files
-          .createTempDirectory("graft-repair").toString + "/store"
-        val conf = s.sparkContext.hadoopConfiguration
-        val fs = new org.apache.hadoop.fs.Path(src).getFileSystem(conf)
-        org.apache.hadoop.fs.FileUtil.copy(fs,
-          new org.apache.hadoop.fs.Path(src), fs,
-          new org.apache.hadoop.fs.Path(dst), false, conf)
+        val dst = clonePath(s, src)
+        val fs = new org.apache.hadoop.fs.Path(dst)
+          .getFileSystem(s.sparkContext.hadoopConfiguration)
         // fault injection: drop every r1 partition of the rerank tier
         // only (codes survive — the exact one-tier-rewritten divergence)
         val root = new org.apache.hadoop.fs.Path(s"$dst/rerank/codes")

@@ -6,6 +6,8 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.pipeline.EavStore
@@ -31,6 +33,24 @@ class EavStoreSpec extends SparkSpec {
     new java.io.File(s"$dir/partition_id=$part").listFiles()
       .filter(_.getName.endsWith(".parquet")).map(f => f.getName -> f.length).toMap
 
+  /** A store whose data files are `parts` written as plain parquet, to
+    * shape its file layout, under the schema record an upsert of the same
+    * columns writes (an upsert of no rows). */
+  private def rawStore(dir: String, parts: DataFrame*): Unit = {
+    EavStore.upsert(spark, parts.head.limit(0), dir)
+    parts.foreach(_.write.mode("append").partitionBy("partition_id").parquet(dir))
+  }
+
+  /** Every file under `dir`, hidden ones included, with its bytes. */
+  private def snapshot(dir: String): Map[String, Seq[Byte]] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    val paths = Files.walk(root)
+    try paths.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+    finally paths.close()
+  }
+
   /** Input records over every task `body` runs, summed by a listener: source
     * rows, one per columnar cache batch read back, one per checkpointed row
     * read back. */
@@ -48,7 +68,7 @@ class EavStoreSpec extends SparkSpec {
   }
 
   test("upsert replaces rows on (hash, partition_id) and unions the rest") {
-    val dir = Files.createTempDirectory("eav").toString + "/store"
+    val dir = LocalSession.tempDir("eav").toString + "/store"
     val first = Seq(
       row("h1", "p1", "2021-01-01", "old1"),
       row("h2", "p1", "2021-01-02", "old2"),
@@ -78,7 +98,7 @@ class EavStoreSpec extends SparkSpec {
     // reference uploader.py:320-325 — a re-released row with the same
     // (hash, partition_id) must REPLACE the stored payload: not drop the
     // update, not keep both versions.
-    val dir = Files.createTempDirectory("eav_upd").toString + "/store"
+    val dir = LocalSession.tempDir("eav_upd").toString + "/store"
     val schema = Seq("hash", "release_id", "areaType", "areaCode", "metric",
       "partition_id", "date", "payload")
     EavStore.upsert(spark,
@@ -93,7 +113,7 @@ class EavStoreSpec extends SparkSpec {
   }
 
   test("upsert is idempotent: re-upserting the same release changes nothing") {
-    val dir = Files.createTempDirectory("eav_idem").toString + "/store"
+    val dir = LocalSession.tempDir("eav_idem").toString + "/store"
     val schema = Seq("hash", "release_id", "areaType", "areaCode", "metric",
       "partition_id", "date", "payload")
     val rel = Seq(row("h1", "p1", "2021-01-01", "v1"),
@@ -106,7 +126,7 @@ class EavStoreSpec extends SparkSpec {
   }
 
   test("write clustering bounds files per store partition") {
-    val dir = Files.createTempDirectory("eav_files").toString + "/store"
+    val dir = LocalSession.tempDir("eav_files").toString + "/store"
     val rows = (1 to 5000).map(i =>
       row(s"h$i", s"p${i % 3}", "2021-01-01", s"v$i"))
       .toDF("hash", "release_id", "areaType", "areaCode", "metric",
@@ -121,9 +141,9 @@ class EavStoreSpec extends SparkSpec {
   }
 
   test("S13 dump/load migration round-trip: store -> JSON.gz -> rebuilt store") {
-    val src = Files.createTempDirectory("eav_src").toString + "/store"
-    val dump = Files.createTempDirectory("eav_dump").toString + "/dump"
-    val dst = Files.createTempDirectory("eav_dst").toString + "/store"
+    val src = LocalSession.tempDir("eav_src").toString + "/store"
+    val dump = LocalSession.tempDir("eav_dump").toString + "/dump"
+    val dst = LocalSession.tempDir("eav_dst").toString + "/store"
     val rows = Seq(
       row("h1", "p1", "2021-01-01", "v1"), row("h2", "p2", "2021-01-02", "v2"))
       .toDF("hash", "release_id", "areaType", "areaCode", "metric",
@@ -144,16 +164,15 @@ class EavStoreSpec extends SparkSpec {
   }
 
   test("compact rewrites only fragmented partitions and preserves content") {
-    val dir = Files.createTempDirectory("eav_compact").toString + "/store"
+    val dir = LocalSession.tempDir("eav_compact").toString + "/store"
     val schema = Seq("hash", "release_id", "areaType", "areaCode", "metric",
       "partition_id", "date", "payload")
     // p1 fragmented (40 files for 200 rows), p2 healthy (1 file)
     val frag = (1 to 200).map(i =>
       row(s"h$i", "2026_8_1|p1", "2021-01-01", s"v$i"))
       .toDF(schema: _*)
-    frag.repartition(40).write.partitionBy("partition_id").parquet(dir)
-    Seq(row("x1", "2026_8_1|p2", "2021-01-02", "w1")).toDF(schema: _*)
-      .coalesce(1).write.mode("append").partitionBy("partition_id").parquet(dir)
+    rawStore(dir, frag.repartition(40),
+      Seq(row("x1", "2026_8_1|p2", "2021-01-02", "w1")).toDF(schema: _*).coalesce(1))
 
     def files(part: String): Array[java.io.File] =
       new java.io.File(s"$dir/partition_id=$part")
@@ -177,12 +196,11 @@ class EavStoreSpec extends SparkSpec {
   }
 
   test("compact honors a maxFiles bound below FilesPerPartition and converges") {
-    val dir = Files.createTempDirectory("eav_compact4").toString + "/store"
+    val dir = LocalSession.tempDir("eav_compact4").toString + "/store"
     val schema = Seq("hash", "release_id", "areaType", "areaCode", "metric",
       "partition_id", "date", "payload")
-    (1 to 100).map(i => row(s"h$i", "p1", "2021-01-01", s"v$i"))
-      .toDF(schema: _*)
-      .repartition(20).write.partitionBy("partition_id").parquet(dir)
+    rawStore(dir, (1 to 100).map(i => row(s"h$i", "p1", "2021-01-01", s"v$i"))
+      .toDF(schema: _*).repartition(20))
     assert(EavStore.compact(spark, dir, maxFiles = 4) === Seq("p1"))
     val files = new java.io.File(s"$dir/partition_id=p1")
       .listFiles().count(_.getName.endsWith(".parquet"))
@@ -194,13 +212,12 @@ class EavStoreSpec extends SparkSpec {
   test("partition values with '+' survive the vacuum/compact decode round-trip") {
     // Hive path escaping writes '+' unescaped; URLDecoder would turn it into
     // a space and the retention predicate would see the wrong value
-    val dir = Files.createTempDirectory("eav_plus").toString + "/store"
+    val dir = LocalSession.tempDir("eav_plus").toString + "/store"
     val schema = Seq("hash", "release_id", "areaType", "areaCode", "metric",
       "partition_id", "date", "payload")
-    Seq(row("h1", "2026_8_1|a+b", "2021-01-01", "v1"),
+    rawStore(dir, Seq(row("h1", "2026_8_1|a+b", "2021-01-01", "v1"),
         row("h2", "2026_8_2|a+b", "2021-01-02", "v2"))
-      .toDF(schema: _*)
-      .write.partitionBy("partition_id").parquet(dir)
+      .toDF(schema: _*))
     val seen = scala.collection.mutable.Set[String]()
     EavStore.vacuum(spark, dir, keep = { v => seen += v; v.contains("2026_8_2") })
     assert(seen === Set("2026_8_1|a+b", "2026_8_2|a+b"), seen)
@@ -209,13 +226,12 @@ class EavStoreSpec extends SparkSpec {
   }
 
   test("vacuum drops partitions failing the retention predicate, nothing else") {
-    val dir = Files.createTempDirectory("eav_vacuum").toString + "/store"
+    val dir = LocalSession.tempDir("eav_vacuum").toString + "/store"
     val schema = Seq("hash", "release_id", "areaType", "areaCode", "metric",
       "partition_id", "date", "payload")
-    Seq(row("h1", "2026_8_1|supplier", "2021-01-01", "old"),
+    rawStore(dir, Seq(row("h1", "2026_8_1|supplier", "2021-01-01", "old"),
         row("h2", "2026_8_2|supplier", "2021-01-02", "new"))
-      .toDF(schema: _*)
-      .write.partitionBy("partition_id").parquet(dir)
+      .toDF(schema: _*))
     val dropped = EavStore.vacuum(spark, dir, keep = _.startsWith("2026_8_2"))
     assert(dropped === Seq("2026_8_1|supplier"))
     val rest = EavStore.read(spark, dir).select("hash").as[String].collect().toSeq
@@ -223,7 +239,7 @@ class EavStoreSpec extends SparkSpec {
   }
 
   test("duplicate input keys keep the earliest date, into an empty store and a stored partition") {
-    val dir = Files.createTempDirectory("eav_dup").toString + "/store"
+    val dir = LocalSession.tempDir("eav_dup").toString + "/store"
     EavStore.upsert(spark, Seq(
       row("h1", "p1", "2021-01-05", "late"), row("h1", "p1", "2021-01-02", "early"),
       row("h2", "p1", "2021-01-03", "v2")).toDF(cols: _*), dir)
@@ -237,7 +253,7 @@ class EavStoreSpec extends SparkSpec {
   }
 
   test("publishing a new partition leaves every stored partition's files as they were") {
-    val dir = Files.createTempDirectory("eav_newpart").toString + "/store"
+    val dir = LocalSession.tempDir("eav_newpart").toString + "/store"
     EavStore.upsert(spark, rows("p1", 300, "a").unionByName(rows("p2", 300, "b")), dir)
     val before = Seq("p1", "p2").map(p => p -> parquetFiles(dir, p)).toMap
     EavStore.upsert(spark, rows("p3", 300, "c"), dir)
@@ -247,7 +263,7 @@ class EavStoreSpec extends SparkSpec {
   }
 
   test("upsert leaves a caller's cache in place and unpins only its own pin") {
-    val dir = Files.createTempDirectory("eav_cached").toString + "/store"
+    val dir = LocalSession.tempDir("eav_cached").toString + "/store"
     val cached = rows("p1", 50, "a").cache()
     cached.count()
     EavStore.upsert(spark, cached, dir)             // empty store
@@ -261,7 +277,7 @@ class EavStoreSpec extends SparkSpec {
   }
 
   test("write clustering bounds files per store partition on the merge path") {
-    val dir = Files.createTempDirectory("eav_mergefiles").toString + "/store"
+    val dir = LocalSession.tempDir("eav_mergefiles").toString + "/store"
     def release(from: Int, tag: String) = (from until from + 3000).map(i =>
       row(s"h$i", s"p${i % 3}", "2021-01-01", s"$tag$i")).toDF(cols: _*)
     EavStore.upsert(spark, release(0, "a"), dir)
@@ -277,7 +293,7 @@ class EavStoreSpec extends SparkSpec {
   }
 
   test("upsert evaluates its input once: it reads the source as one noop write does") {
-    val base = Files.createTempDirectory("eav_reads").toString
+    val base = LocalSession.tempDir("eav_reads").toString
     val dir = s"$base/store"
     EavStore.upsert(spark, rows("p_old", 400, "a"), dir)
     rows("p_new", 600, "b").repartition(3).write.parquet(s"$base/in")
@@ -296,5 +312,48 @@ class EavStoreSpec extends SparkSpec {
     assert(again >= once + 600 && again <= once + 600 + 3 * pinReads,
       s"re-publish read $again")
     assert(payloads(dir).size === 1000)
+  }
+
+  test("the schema record equals every data file's footer schema after upserts") {
+    val dir = LocalSession.tempDir("eav_schema").toString + "/store"
+    EavStore.upsert(spark, rows("p1", 300, "a"), dir)
+    EavStore.upsert(spark, rows("p1", 300, "b").unionByName(rows("p2", 100, "c")), dir)
+    val recorded = DataType.fromJson(new String(
+      Files.readAllBytes(java.nio.file.Paths.get(dir, EavStore.SchemaFile)), "UTF-8"))
+      .asInstanceOf[StructType]
+    assert(recorded.catalogString === rows("p1", 1, "a").schema.catalogString)
+    val inFiles = StructType(recorded.filterNot(_.name == "partition_id")).catalogString
+    val files = snapshot(dir).keys.filter(_.endsWith(".parquet")).toSeq
+    assert(files.nonEmpty)
+    files.foreach(f =>
+      assert(spark.read.parquet(s"$dir/$f").schema.catalogString === inFiles, f))
+    // the declared read has the columns, types and order inference finds
+    assert(EavStore.read(spark, dir).schema.catalogString ===
+      spark.read.parquet(dir).schema.catalogString)
+  }
+
+  test("an upsert whose schema differs from the record fails and writes nothing") {
+    val dir = LocalSession.tempDir("eav_mismatch").toString + "/store"
+    EavStore.upsert(spark, rows("p1", 50, "a"), dir)
+    val before = snapshot(dir)
+    // a new partition (nothing to merge with) and a stored one
+    Seq(rows("p2", 50, "b").withColumn("date", col("date").cast("string")),
+        rows("p1", 50, "c").withColumn("note", lit("x"))).foreach { df =>
+      val e = intercept[IllegalArgumentException](EavStore.upsert(spark, df, dir))
+      assert(e.getMessage.contains("recorded schema"), e.getMessage)
+      assert(snapshot(dir) === before)
+    }
+    assert(payloads(dir).values.toSet === (1 to 50).map(i => s"a$i").toSet)
+    // data without a record is not a store: no inference fallback
+    val bare = LocalSession.tempDir("eav_bare").toString + "/store"
+    rows("p1", 5, "a").write.partitionBy("partition_id").parquet(bare)
+    intercept[IllegalArgumentException](EavStore.upsert(spark, rows("p1", 5, "b"), bare))
+    intercept[IllegalStateException](EavStore.read(spark, bare))
+  }
+
+  test("building each dashboard request over an upserted store runs no Spark job") {
+    val store = EavRequests.store(spark, sf)
+    val jobs = EavRequests.Kinds.map(k => k -> jobsDuring(EavRequests(spark, store, k, "1", "qty")))
+    assert(jobs === EavRequests.Kinds.map(_ -> 0))
   }
 }

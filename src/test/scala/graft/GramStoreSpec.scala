@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.GramStore
@@ -19,7 +17,7 @@ class GramStoreSpec extends SparkSpec {
   private val isNew = col("doc_id") % 10 >= 8
 
   test("novelty against the read-back store equals the inline q132 answer") {
-    val dir = Files.createTempDirectory("gramstore").toString + "/store"
+    val dir = LocalSession.tempDir("gramstore").toString + "/store"
     GramStore.append(spark, dir, "r1", docs.where(!isNew), "text")
     val fromDisk = GramStore.noveltyAgainst(docs.where(isNew), "doc_id",
         "text", GramStore.read(spark, dir))
@@ -31,7 +29,7 @@ class GramStoreSpec extends SparkSpec {
   }
 
   test("sketchHitReleases: a shared gram hits, a disjoint delta clears, a sketch-less release always lists, vacuum drops the sketch") {
-    val dir = Files.createTempDirectory("gramstore_sketch").toString + "/store"
+    val dir = LocalSession.tempDir("gramstore_sketch").toString + "/store"
     GramStore.append(spark, dir, "r1", docs.where(!isNew), "text")
     GramStore.append(spark, dir, "r2", docs.where(isNew), "text")
     // a delta that re-presents r1's stored grams MUST hit r1 (this is the
@@ -70,7 +68,7 @@ class GramStoreSpec extends SparkSpec {
   }
 
   test("a nonexistent store reads as an empty typed frame") {
-    val dir = Files.createTempDirectory("gramstore_none").toString + "/store"
+    val dir = LocalSession.tempDir("gramstore_none").toString + "/store"
     // the fresh-store empty-novel branch of append leaves the path
     // unmaterialized — a caller appending an empty slice then reading
     // (rollForwardOnDisk on an empty retained release) must see empty,
@@ -85,7 +83,7 @@ class GramStoreSpec extends SparkSpec {
   }
 
   test("append is idempotent; accepting a release adds only its novel margin") {
-    val dir = Files.createTempDirectory("gramstore_idem").toString + "/store"
+    val dir = LocalSession.tempDir("gramstore_idem").toString + "/store"
     val oldSlice = docs.where(!isNew)
     GramStore.append(spark, dir, "r1", oldSlice, "text")
     val once = GramStore.read(spark, dir).count()

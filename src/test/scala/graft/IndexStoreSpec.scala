@@ -1,12 +1,8 @@
 package graft
 
-import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.Similarity
 import graft.pipeline.IndexStore
@@ -38,7 +34,7 @@ class IndexStoreSpec extends SparkSpec {
       iters = 3, release = release)
 
   test("an EMPTY release append vacuums its ghost partitions (rerun-converges empty corner)") {
-    val dir = Files.createTempDirectory("ivfadc_empty").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_empty").toString + "/index"
     val isOld = col("vec_id") % 10 < 8
     build(dir, emb.where(isOld))
     IndexStore.buildRerank(spark, dir, fullVecs)
@@ -64,7 +60,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("frozen-disk serve equals the in-job ivfPqTopK answer") {
-    val dir = Files.createTempDirectory("ivfadc_rt").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_rt").toString + "/index"
     build(dir, emb)
     val served = IndexStore.query(spark, dir, queriesDf, fullVecs,
       nProbe = 2, k = 5, shortlist = 100)
@@ -76,7 +72,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("queryFiltered: all-ids keep equals query; selective keep pre-filters before the shortlist") {
-    val dir = Files.createTempDirectory("ivfadc_filt").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_filt").toString + "/index"
     build(dir, emb)
     val allIds = emb.select(col("vec_id").cast("long").as("cand_id"))
     val plain = IndexStore.query(spark, dir, queriesDf, fullVecs,
@@ -110,7 +106,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("queryFilteredInt8: all-ids keep equals queryInt8; keep pre-filters the int8 serve") {
-    val dir = Files.createTempDirectory("ivfadc_fi8").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_fi8").toString + "/index"
     build(dir, emb)
     IndexStore.buildRerank(spark, dir, fullVecs)
     val allIds = emb.select(col("vec_id").cast("long").as("cand_id"))
@@ -134,45 +130,78 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("serve's eager build runs a fixed number of Spark jobs per shape") {
-    val dir = Files.createTempDirectory("ivfadc_jobs").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_jobs").toString + "/index"
     build(dir, emb)
     IndexStore.buildRerank(spark, dir, fullVecs)
     val keep = emb.where(col("label") % 2 === 0)
       .select(col("vec_id").cast("long").as("cand_id"))
-    def jobsStarted(body: => DataFrame): Int = {
-      val n = new AtomicInteger()
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          n.incrementAndGet()
-      }
-      ListenerBusDrain.drain(spark.sparkContext)
-      spark.sparkContext.addSparkListener(listener)
-      try { body; ListenerBusDrain.drain(spark.sparkContext) }
-      finally spark.sparkContext.removeSparkListener(listener)
-      n.get
-    }
     def serve(spec: ServeSpec): DataFrame =
       IndexStore.serve(spark, dir, queriesDf, spec, nProbe = 2, k = 5,
         shortlist = 100)
-    // building the frame runs only the metadata reads and the probed-cell
-    // collect; int8 adds one rerank-stats read (schema inference plus one
-    // collect) and the tier's schema inference. The serve itself runs at
-    // the caller's action.
+    // building the frame runs only the metadata collects and the
+    // probed-cell collect, every read with its declared schema; int8 adds
+    // one rerank-stats read (schema inference plus one collect) and the
+    // tier's schema inference. The serve itself runs at the caller's action.
     val shapes = Seq[(String, () => DataFrame, Int)](
-      ("raw", () => serve(ServeSpec(Raw(fullVecs))), 8),
-      ("raw+keep", () => serve(ServeSpec(Raw(fullVecs), keep = Some(keep))), 8),
+      ("raw", () => serve(ServeSpec(Raw(fullVecs))), 5),
+      ("raw+keep", () => serve(ServeSpec(Raw(fullVecs), keep = Some(keep))), 5),
       ("raw+releases", () =>
-        serve(ServeSpec(Raw(fullVecs), releases = Some(Seq("r1")))), 8),
-      ("int8", () => serve(ServeSpec(Int8)), 11),
-      ("int8+keep", () => serve(ServeSpec(Int8, keep = Some(keep))), 11),
+        serve(ServeSpec(Raw(fullVecs), releases = Some(Seq("r1")))), 5),
+      ("int8", () => serve(ServeSpec(Int8)), 8),
+      ("int8+keep", () => serve(ServeSpec(Int8, keep = Some(keep))), 8),
       ("decontaminate", () => IndexStore.decontaminate(spark, dir, queriesDf,
-        fullVecs, nProbe = 2, shortlist = 100, threshold = 0.3), 8))
-    val counts = shapes.map { case (name, df, _) => name -> jobsStarted(df()) }
+        fullVecs, nProbe = 2, shortlist = 100, threshold = 0.3), 5))
+    val counts = shapes.map { case (name, df, _) => name -> jobsDuring(df()) }
     assert(counts === shapes.map { case (name, _, n) => name -> n })
   }
 
+  test("every serve-path table is written in its declared schema: build, append, delete, rebalance") {
+    val dir = LocalSession.tempDir("ivfadc_schema").toString + "/index"
+    // the schema of every parquet file under `sub`, nullability aside
+    def footers(sub: String): Set[String] = {
+      def files(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
+        else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
+      files(new java.io.File(s"$dir/$sub"))
+        .map(f => spark.read.parquet(f.toString).schema.catalogString).toSet
+    }
+    // `s` without its partition columns: what the files themselves hold
+    def inFiles(s: StructType, partitions: String*): String =
+      StructType(s.filterNot(f => partitions.contains(f.name))).catalogString
+    val tables = Seq(
+      "meta/centroids" -> inFiles(IndexStore.CentroidsSchema),
+      "meta/codebooks" -> inFiles(IndexStore.CodebooksSchema),
+      "meta/rotation" -> inFiles(IndexStore.RotationSchema),
+      "codes" -> inFiles(IndexStore.CodesSchema, "cell", "release"),
+      "tombstones" -> inFiles(IndexStore.TombstoneSchema))
+    def check(step: String, absent: String*): Unit = {
+      tables.foreach { case (sub, declared) =>
+        assert(footers(sub) === (if (absent.contains(sub)) Set() else Set(declared)),
+          s"after $step: $sub")
+      }
+      // the declared read types the partition columns, and no declared
+      // column is missing from the files (it would read as null)
+      assert(IndexStore.readCodes(spark, dir).where(col("cand_id").isNull ||
+        col("codes").isNull || col("cell").isNull || col("release").isNull).isEmpty)
+    }
+    IndexStore.build(spark, dir, emb.where(!isNew), "vec_id", "embedding",
+      dim = 64, kCoarse = 8, coarseIters = 4, m = 16, ksub = 8, iters = 3,
+      release = "r1", opq = true)
+    check("build", "tombstones")
+    IndexStore.append(spark, dir, emb.where(isNew), "vec_id", "embedding", "r2")
+    check("append", "tombstones")
+    IndexStore.delete(spark, dir, emb.where(col("vec_id") % 7 === 3).select("vec_id"))
+    check("delete")
+    assert(IndexStore.readTombstones(spark, dir).get.count() ===
+      emb.where(col("vec_id") % 7 === 3).count())
+    IndexStore.rebalance(spark, dir, emb, "vec_id", "embedding",
+      kCoarse = 4, coarseIters = 4, pqIters = 3)
+    // the rebalance realized every tombstone and cleared the list
+    check("rebalance", "tombstones")
+  }
+
   test("queryAsOf: r1-restricted serve is bit-identical to the pre-append answer") {
-    val dir = Files.createTempDirectory("ivfadc_asof").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_asof").toString + "/index"
     val isOld = col("vec_id") % 10 < 8
     build(dir, emb.where(isOld))
     // what the store answered when r1 WAS the whole population
@@ -194,7 +223,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("frozen-store kNN graph equals the inline-encode twin; mutual is reciprocal membership") {
-    val dir = Files.createTempDirectory("ivfadc_knn").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_knn").toString + "/index"
     build(dir, emb)
     val nodes = emb.select(col("vec_id").cast("long").as("q_id"),
       col("embedding").cast("array<double>").as("q_emb"))
@@ -262,7 +291,7 @@ class IndexStoreSpec extends SparkSpec {
     val planted = emb.where(col("vec_id") === 0)
       .withColumn("vec_id", lit(maxId + 1))
     val corpus = emb.where(!isEval).unionByName(planted)
-    val dir = Files.createTempDirectory("ivfadc_decont").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_decont").toString + "/index"
     build(dir, corpus)
     val evals = emb.where(isEval)
       .select(col("vec_id").cast("long").as("q_id"),
@@ -285,7 +314,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("model round-trips through the meta files bit-for-bit") {
-    val dir = Files.createTempDirectory("ivfadc_model").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_model").toString + "/index"
     val model = Similarity.ivfPqTrain(emb, "vec_id", "embedding",
       dim = 64, kCoarse = 8, coarseIters = 4, m = 16, ksub = 8, iters = 3)
     build(dir, emb)
@@ -297,7 +326,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("rebuild is idempotent: run-twice leaves an identical index") {
-    val dir = Files.createTempDirectory("ivfadc_idem").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_idem").toString + "/index"
     build(dir, emb)
     val once = IndexStore.readCodes(spark, dir)
       .select("cand_id", "cell", "codes", "release").collect().toSet
@@ -308,7 +337,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("release append is map-only frozen-encode and idempotent per release") {
-    val dir = Files.createTempDirectory("ivfadc_app").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_app").toString + "/index"
     // seed index trains on the OLD slice only
     build(dir, emb.where(!isNew))
     val model = IndexStore.readModel(spark, dir)
@@ -331,7 +360,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("vacuum drops exactly the rejected releases' code partitions") {
-    val dir = Files.createTempDirectory("ivfadc_vac").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_vac").toString + "/index"
     build(dir, emb.where(!isNew), release = "r1")
     IndexStore.buildRerank(spark, dir,
       emb.where(!isNew).select(col("vec_id").cast("long").as("cand_id"),
@@ -362,7 +391,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("rebalance heals a degenerate quantizer and equals a fresh build; releases survive") {
-    val dir = Files.createTempDirectory("ivfadc_reb").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_reb").toString + "/index"
     // plant the q178 failure mode: kCoarse = 2 monster cells, two releases
     build(dir, emb.where(!isNew), release = "r1", kCoarse = 2)
     IndexStore.append(spark, dir, emb.where(isNew), "vec_id", "embedding",
@@ -391,7 +420,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("compact rewrites targeted release partitions to one file each; serve is bit-identical") {
-    val dir = Files.createTempDirectory("ivfadc_cpt").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_cpt").toString + "/index"
     // at spec scale AQE coalesces the write into one task per partition —
     // turn it off for the fixture build so the (cell, hash-bucket)
     // repartition fragments partitions the way corpus-sized writes do
@@ -467,7 +496,7 @@ class IndexStoreSpec extends SparkSpec {
     // pruned rerank scan would silently drop candidates — the guard turns
     // that into a loud refusal. Emulate the window by advancing the
     // persisted generation stamp, the only observable the guard keys on.
-    val dir = Files.createTempDirectory("ivfadc_gen").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_gen").toString + "/index"
     build(dir, emb)
     IndexStore.buildRerank(spark, dir, fullVecs)
     val genPath = new org.apache.hadoop.fs.Path(s"$dir/meta/_generation")
@@ -502,7 +531,7 @@ class IndexStoreSpec extends SparkSpec {
     // without the rebuild, the tier keeps the DEGENERATE cell keys and the
     // partition-pruned rerank scan silently drops shortlisted candidates
     // whose rows sit under stale cells — the worst kind of wrong answer
-    val dir = Files.createTempDirectory("ivfadc_rebt").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_rebt").toString + "/index"
     build(dir, emb, kCoarse = 2)
     IndexStore.buildRerank(spark, dir, fullVecs)
     IndexStore.rebalance(spark, dir, emb, "vec_id", "embedding",
@@ -510,7 +539,7 @@ class IndexStoreSpec extends SparkSpec {
     val served = IndexStore.serve(spark, dir, queriesDf, ServeSpec(Int8),
       nProbe = 2, k = 5, shortlist = 100)
     // a fresh kc8 store with a fresh tier is the converged target
-    val dirF = Files.createTempDirectory("ivfadc_rebtF").toString + "/index"
+    val dirF = LocalSession.tempDir("ivfadc_rebtF").toString + "/index"
     build(dirF, emb, kCoarse = 8)
     IndexStore.buildRerank(spark, dirF, fullVecs)
     val freshServe = IndexStore.serve(spark, dirF, queriesDf,
@@ -521,7 +550,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("OPQ store: frozen-disk serve equals inline rotate+ivfPqTopK; rotation survives append and retrains on rebalance") {
-    val dir = Files.createTempDirectory("ivfadc_opq").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_opq").toString + "/index"
     IndexStore.build(spark, dir, emb, "vec_id", "embedding",
       dim = 64, kCoarse = 8, coarseIters = 4, m = 16, ksub = 8, iters = 3,
       release = "r1", opq = true)
@@ -541,7 +570,7 @@ class IndexStoreSpec extends SparkSpec {
 
     // append freezes the rotation: new codes = frozen-model encode of the
     // rotated union, quantizer metadata untouched
-    val dir2 = Files.createTempDirectory("ivfadc_opq_app").toString + "/index"
+    val dir2 = LocalSession.tempDir("ivfadc_opq_app").toString + "/index"
     IndexStore.build(spark, dir2, emb.where(!isNew), "vec_id", "embedding",
       dim = 64, kCoarse = 8, coarseIters = 4, m = 16, ksub = 8, iters = 3,
       release = "r1", opq = true)
@@ -563,7 +592,7 @@ class IndexStoreSpec extends SparkSpec {
     // rebalance retrains rotation + model on the full corpus with the same
     // params — the healed degenerate OPQ store answers exactly like the
     // fresh OPQ build above
-    val dir3 = Files.createTempDirectory("ivfadc_opq_reb").toString + "/index"
+    val dir3 = LocalSession.tempDir("ivfadc_opq_reb").toString + "/index"
     IndexStore.build(spark, dir3, emb, "vec_id", "embedding",
       dim = 64, kCoarse = 2, coarseIters = 4, m = 16, ksub = 8, iters = 3,
       release = "r1", opq = true)
@@ -578,7 +607,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("int8 rerank tier: store-only serve equals inline dequantized serve; both scans partition-prune") {
-    val dir = Files.createTempDirectory("ivfadc_i8").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_i8").toString + "/index"
     build(dir, emb)
     IndexStore.buildRerank(spark, dir, fullVecs)
     val served = IndexStore.serve(spark, dir, queriesDf, ServeSpec(Int8),
@@ -628,7 +657,7 @@ class IndexStoreSpec extends SparkSpec {
 
     // an OPQ store's tier lives in the ROTATED space: int8 serve equals
     // the inline rotate→dequantize→serve composition (no double rotation)
-    val dirO = Files.createTempDirectory("ivfadc_i8opq").toString + "/index"
+    val dirO = LocalSession.tempDir("ivfadc_i8opq").toString + "/index"
     IndexStore.build(spark, dirO, emb, "vec_id", "embedding",
       dim = 64, kCoarse = 8, coarseIters = 4, m = 16, ksub = 8, iters = 3,
       release = "r1", opq = true)
@@ -646,7 +675,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("appendRerank rolls the int8 tier forward under frozen stats; clamps; rerun idempotent") {
-    val dir = Files.createTempDirectory("ivfadc_i8app").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_i8app").toString + "/index"
     val old = emb.where(!isNew)
     val fresh = emb.where(isNew)
     def cands(d: DataFrame) = d.select(
@@ -733,7 +762,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("rebalance refuses a partial vectors frame instead of shrinking the store") {
-    val dir = Files.createTempDirectory("ivfadc_partial").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_partial").toString + "/index"
     build(dir, emb, kCoarse = 2)
     val before = IndexStore.readCodes(spark, dir).count()
     // the re-encode is an inner join against the resident id set — a caller
@@ -753,7 +782,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("healthVerdict on an empty codes table trips needs_rebalance with 0-shares") {
-    val dir = Files.createTempDirectory("ivfadc_empty").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_empty").toString + "/index"
     build(dir, emb)
     // the most degenerate store of all: a codes table with zero rows (e.g.
     // every release vacuumed) — overwrite with an empty same-schema parquet
@@ -770,7 +799,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("interrupted rebalance converges from either side of the swap marker") {
-    val dir = Files.createTempDirectory("ivfadc_rec").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_rec").toString + "/index"
     build(dir, emb)
     val served0 = IndexStore.query(spark, dir, queriesDf, fullVecs,
       nProbe = 2, k = 5, shortlist = 100).collect()
@@ -805,7 +834,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("healthVerdict reduces the per-cell card to the policy row consistently") {
-    val dir = Files.createTempDirectory("ivfadc_hv").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_hv").toString + "/index"
     build(dir, emb)
     val card = IndexStore.readCodes(spark, dir)
       .groupBy("cell").count().collect().map(_.getLong(1))
@@ -818,7 +847,7 @@ class IndexStoreSpec extends SparkSpec {
     assert(v.getLong(2) === shares.max && v.getLong(3) === shares.min)
     assert(v.getBoolean(4) === (shares.max > 300 || card.length < 8))
     // the degenerate store must trip the flag
-    val dir2 = Files.createTempDirectory("ivfadc_hv2").toString + "/index"
+    val dir2 = LocalSession.tempDir("ivfadc_hv2").toString + "/index"
     build(dir2, emb, kCoarse = 2)
     val v2 = IndexStore.healthVerdict(spark, dir2, kCoarse = 2,
       maxShareMilli = 300).collect()(0)
@@ -826,7 +855,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("recall audit is monotone in the dial knobs; dial picks the cheapest meeting combo") {
-    val dir = Files.createTempDirectory("ivfadc_dial").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_dial").toString + "/index"
     build(dir, emb)
     val grid = Seq((1, 10), (1, 100), (2, 10), (2, 100), (4, 10), (4, 100))
     val audit = IndexStore.recallAudit(spark, dir, queriesDf, fullVecs,
@@ -868,7 +897,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("serve scans only the probed cells (partition-pruned)") {
-    val dir = Files.createTempDirectory("ivfadc_prune").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_prune").toString + "/index"
     build(dir, emb)
     val model = IndexStore.readModel(spark, dir)
     val oneQ = queriesDf.orderBy("q_id").limit(1)
@@ -891,7 +920,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("delete tombstones exclude from every serve path; purge reclaims and answers identically") {
-    val dir = Files.createTempDirectory("ivfadc_tomb").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_tomb").toString + "/index"
     build(dir, emb)
     IndexStore.buildRerank(spark, dir, fullVecs)
     val tomb = emb.where(col("vec_id") % 7 === 3)
@@ -943,7 +972,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("a re-appended tombstoned id stays excluded until purged") {
-    val dir = Files.createTempDirectory("ivfadc_tomb2").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_tomb2").toString + "/index"
     val isOld = col("vec_id") % 10 < 8
     build(dir, emb.where(isOld))
     val victim = emb.where(isOld).select(col("vec_id").cast("long").as("cand_id"))
@@ -960,7 +989,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("purge reports exact per-table removed counts (never-resident tombstoned ids do not inflate them)") {
-    val dir = Files.createTempDirectory("ivfadc_tomb4").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_tomb4").toString + "/index"
     build(dir, emb)
     IndexStore.buildRerank(spark, dir, fullVecs)
     val victims = emb.where(col("vec_id") % 7 === 3)
@@ -978,7 +1007,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("purge deletes fully-emptied (cell, release) partition directories") {
-    val dir = Files.createTempDirectory("ivfadc_tomb3").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_tomb3").toString + "/index"
     val isOld = col("vec_id") % 10 < 8
     build(dir, emb.where(isOld))
     IndexStore.append(spark, dir, emb.where(!isOld), "vec_id", "embedding", "r2")
@@ -1000,7 +1029,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("rebalance re-encodes only servable residents and clears the tombstone list") {
-    val dir = Files.createTempDirectory("ivfadc_tomb4").toString + "/index"
+    val dir = LocalSession.tempDir("ivfadc_tomb4").toString + "/index"
     build(dir, emb)
     val tomb = emb.where(col("vec_id") % 7 === 3)
       .select(col("vec_id").cast("long").as("cand_id"))

@@ -33,7 +33,7 @@ class NestedJsonSpec extends SparkSpec {
       |}""".stripMargin
 
   test("nested release JSON shreds to the long categorical frame") {
-    val dir = Files.createTempDirectory("nested").toString
+    val dir = LocalSession.tempDir("nested").toString
     Files.writeString(Paths.get(s"$dir/data.json"), fixture)
     val df = NestedJson.parseRelease(spark, s"$dir/data.json")
     assert(df.count() === 5)

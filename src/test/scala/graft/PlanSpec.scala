@@ -29,6 +29,32 @@ class PlanSpec extends SparkSpec {
     assert(!scan.contains("l_extendedprice"))
   }
 
+  test("EAV serving scans prune to the release partition and push area, metric and date filters") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val store = EavRequests.store(spark, sf)
+    val r2 = s"(partition_id = ${EavRequests.partition(2)})"
+    val r1 = s"(partition_id = ${EavRequests.partition(1)})"
+    val area = "EqualTo(areaCode,1)"
+    val metric = "EqualTo(metric,qty)"
+    val date = s"GreaterThanOrEqual(date,${EavRequests.DeltaFrom})"
+    // per kind: for each of its scans, the partition it prunes to and the
+    // filters it pushes into the parquet reader
+    val expected = Map(
+      "latest" -> Seq(r2 -> Seq(area, metric)),
+      "blob" -> Seq(r2 -> Seq(area, metric)),
+      "percentiles" -> Seq(r2 -> Seq(metric), r2 -> Seq(metric)),
+      "delta" -> Seq(r2 -> Seq(metric, date), r1 -> Seq(metric, date)))
+    EavRequests.Kinds.foreach { kind =>
+      val scans = EavRequests(spark, store, kind, "1", "qty").queryExecution.sparkPlan
+        .collect { case s: FileSourceScanExec => s.metadata }
+      assert(scans.length === expected(kind).length, s"$kind: $scans")
+      scans.zip(expected(kind)).foreach { case (m, (part, pushed)) =>
+        assert(m("PartitionFilters").replaceAll("#\\d+", "").contains(part), s"$kind: $m")
+        pushed.foreach(f => assert(m("PushedFilters").contains(f), s"$kind: $m"))
+      }
+    }
+  }
+
   test("rolling family shares one window sort (windows never re-exchange)") {
     val p = plan("q05_change_direction")
     // the window stack (rolling sum count+sum, lag-7) must share a single

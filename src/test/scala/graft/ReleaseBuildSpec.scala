@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.Classifier
@@ -25,7 +23,7 @@ class ReleaseBuildSpec extends SparkSpec {
   }
 
   test("roll-forward from persisted stores equals the inline q140 answer") {
-    val dir = Files.createTempDirectory("relbuild").toString
+    val dir = LocalSession.tempDir("relbuild").toString
     SignatureStore.append(spark, s"$dir/sigs", "r0",
       docs.where(!isNew), "doc_id", "text")
     GramStore.append(spark, s"$dir/grams", "r0", docs.where(!isNew), "text")
@@ -38,7 +36,7 @@ class ReleaseBuildSpec extends SparkSpec {
   }
 
   test("a clean disk night's gram-layout audit clears the store from sketches alone; a sketch-less store falls back with the same answer") {
-    val dir = Files.createTempDirectory("relbuild_sketch").toString
+    val dir = LocalSession.tempDir("relbuild_sketch").toString
     SignatureStore.append(spark, s"$dir/sigs", "r0",
       docs.where(!isNew), "doc_id", "text")
     GramStore.append(spark, s"$dir/grams", "r0", docs.where(!isNew), "text")
@@ -54,7 +52,7 @@ class ReleaseBuildSpec extends SparkSpec {
       === Set("r0", "r1"))
     // pre-sketch store: same night, sketches deleted → conservative scan
     // of every prior release, identical retained rows
-    val dir2 = Files.createTempDirectory("relbuild_nosketch").toString
+    val dir2 = LocalSession.tempDir("relbuild_nosketch").toString
     SignatureStore.append(spark, s"$dir2/sigs", "r0",
       docs.where(!isNew), "doc_id", "text")
     GramStore.append(spark, s"$dir2/grams", "r0", docs.where(!isNew), "text")
@@ -72,7 +70,7 @@ class ReleaseBuildSpec extends SparkSpec {
 
   test("text-tier deepAuditEvery: a torn untouched release survives k-1 nights, aborts the k-th, repairRelease re-arms the clock") {
     import graft.pipeline.StoreAudit
-    val dir = Files.createTempDirectory("relbuild_deep").toString
+    val dir = LocalSession.tempDir("relbuild_deep").toString
     val s0 = col("doc_id") % 10 < 3
     val s0b = col("doc_id") % 10 >= 3 && col("doc_id") % 10 < 6
     val s1 = col("doc_id") % 10 >= 6 && col("doc_id") % 10 < 8
@@ -117,7 +115,7 @@ class ReleaseBuildSpec extends SparkSpec {
 
   test("takedownDocs: exact signature removal, gram margin restored, equals stores built without the docs") {
     val isTomb = col("doc_id") % 9 === 2
-    val dir = Files.createTempDirectory("relbuild_tkd").toString
+    val dir = LocalSession.tempDir("relbuild_tkd").toString
     SignatureStore.append(spark, s"$dir/sigs", "r0",
       docs.where(!isNew), "doc_id", "text")
     GramStore.append(spark, s"$dir/grams", "r0", docs.where(!isNew), "text")
@@ -153,7 +151,7 @@ class ReleaseBuildSpec extends SparkSpec {
     // would drop G from b (its docs no longer carry it) AFTER excluding it
     // from a (b still stalely held it) — lost entirely; the second pass
     // must re-admit it under a.
-    val dir = Files.createTempDirectory("relbuild_tkd3").toString
+    val dir = LocalSession.tempDir("relbuild_tkd3").toString
     import spark.implicits._
     val bDocs = Seq((1L, "alpha beta gamma", "s"), (2L, "bravo keeps this", "s"))
       .toDF("doc_id", "text", "source")
@@ -187,7 +185,7 @@ class ReleaseBuildSpec extends SparkSpec {
     // are already exact, the orphan probe finds nothing, and the second
     // full margin rebuild must not run (the common multi-release takedown
     // pays detection cost only)
-    val dir = Files.createTempDirectory("relbuild_tkd4").toString
+    val dir = LocalSession.tempDir("relbuild_tkd4").toString
     import spark.implicits._
     val aDocs = Seq((1L, "alpha beta gamma delta", "s"),
       (2L, "epsilon zeta eta theta", "s")).toDF("doc_id", "text", "source")
@@ -217,7 +215,7 @@ class ReleaseBuildSpec extends SparkSpec {
     // releases (membership is gone) and the dropped docs' grams silently
     // outlive the takedown — the unsafe direction.
     val isTomb = col("doc_id") % 9 === 2
-    val dir = Files.createTempDirectory("relbuild_tkd5").toString
+    val dir = LocalSession.tempDir("relbuild_tkd5").toString
     SignatureStore.append(spark, s"$dir/sigs", "r0",
       docs.where(!isNew), "doc_id", "text")
     GramStore.append(spark, s"$dir/grams", "r0", docs.where(!isNew), "text")
@@ -252,7 +250,7 @@ class ReleaseBuildSpec extends SparkSpec {
     // the NIGHTLY, not a takedown replay: rollForwardOnDisk must converge
     // the pinned restore before building on the stores, or the night's
     // novelty margins read grams of documents the corpus no longer holds
-    val dir = Files.createTempDirectory("relbuild_tkd6").toString
+    val dir = LocalSession.tempDir("relbuild_tkd6").toString
     import spark.implicits._
     val r0Docs = Seq((1L, "alpha beta gamma delta", "s"),
       (2L, "epsilon zeta eta theta", "s")).toDF("doc_id", "text", "source")
@@ -280,7 +278,7 @@ class ReleaseBuildSpec extends SparkSpec {
   }
 
   test("takedownDocs vacuums a release the takedown empties") {
-    val dir = Files.createTempDirectory("relbuild_tkd2").toString
+    val dir = LocalSession.tempDir("relbuild_tkd2").toString
     // two releases; every r1 member is taken down
     val r0 = docs.where(!isNew && col("doc_id") % 2 === 0)
     val r1 = docs.where(!isNew && col("doc_id") % 2 =!= 0)
@@ -301,7 +299,7 @@ class ReleaseBuildSpec extends SparkSpec {
   }
 
   test("re-running the roll-forward is idempotent in output and state") {
-    val dir = Files.createTempDirectory("relbuild_idem").toString
+    val dir = LocalSession.tempDir("relbuild_idem").toString
     SignatureStore.append(spark, s"$dir/sigs", "r0",
       docs.where(!isNew), "doc_id", "text")
     GramStore.append(spark, s"$dir/grams", "r0", docs.where(!isNew), "text")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.SignatureStore
@@ -17,7 +15,7 @@ class SignatureStoreSpec extends SparkSpec {
   private val isNew = col("doc_id") % 10 >= 8
 
   test("dedup against the READ-BACK store equals the inline q120 answer") {
-    val dir = Files.createTempDirectory("sigstore").toString + "/store"
+    val dir = LocalSession.tempDir("sigstore").toString + "/store"
     SignatureStore.append(spark, dir, "r1", docs.where(!isNew), "doc_id", "text")
     val fromDisk = SignatureStore.incrementalNearDups(
       docs.where(isNew), "doc_id", "text",
@@ -28,7 +26,7 @@ class SignatureStoreSpec extends SparkSpec {
   }
 
   test("append is idempotent and re-running a release replaces its partition") {
-    val dir = Files.createTempDirectory("sigstore_idem").toString + "/store"
+    val dir = LocalSession.tempDir("sigstore_idem").toString + "/store"
     val r1 = docs.where(!isNew)
     SignatureStore.append(spark, dir, "r1", r1, "doc_id", "text")
     val once = SignatureStore.read(spark, dir).count()
@@ -41,7 +39,7 @@ class SignatureStoreSpec extends SparkSpec {
   }
 
   test("releases accumulate as partitions; new release signs only itself") {
-    val dir = Files.createTempDirectory("sigstore_rel").toString + "/store"
+    val dir = LocalSession.tempDir("sigstore_rel").toString + "/store"
     SignatureStore.append(spark, dir, "r1", docs.where(!isNew), "doc_id", "text")
     SignatureStore.append(spark, dir, "r2", docs.where(isNew), "doc_id", "text")
     val store = SignatureStore.read(spark, dir)
@@ -56,7 +54,7 @@ class SignatureStoreSpec extends SparkSpec {
     // persisted, release 2 arrives, pairs come from the stored signatures
     // and clusters from star-contracting the stored map — must equal the
     // inline q123 (whose oracle is the from-scratch batch clustering)
-    val dir = Files.createTempDirectory("sigstore_cc").toString
+    val dir = LocalSession.tempDir("sigstore_cc").toString
     val store = s"$dir/sigs"
     val r1 = docs.where(!isNew)
     SignatureStore.append(spark, store, "r1", r1, "doc_id", "text")
@@ -80,7 +78,7 @@ class SignatureStoreSpec extends SparkSpec {
   }
 
   test("vacuum retracts exactly the rejected releases; dedup stops seeing them") {
-    val dir = Files.createTempDirectory("sigstore_vac").toString + "/store"
+    val dir = LocalSession.tempDir("sigstore_vac").toString + "/store"
     SignatureStore.append(spark, dir, "r1", docs.where(!isNew), "doc_id", "text")
     SignatureStore.append(spark, dir, "r2", docs.where(isNew), "doc_id", "text")
     assert(SignatureStore.vacuum(spark, dir, keep = _ == "r2") === Seq("r1"))
@@ -98,7 +96,7 @@ class SignatureStoreSpec extends SparkSpec {
     // vacuuming everything currently kept is a no-op
     assert(SignatureStore.vacuum(spark, dir, keep = _ == "r2") === Seq.empty)
     // GramStore shares the contract (novel-margin caveat documented there)
-    val gdir = Files.createTempDirectory("gramstore_vac").toString + "/store"
+    val gdir = LocalSession.tempDir("gramstore_vac").toString + "/store"
     graft.pipeline.GramStore.append(spark, gdir, "r1", docs.where(!isNew), "text")
     graft.pipeline.GramStore.append(spark, gdir, "r2", docs.where(isNew), "text")
     assert(graft.pipeline.GramStore.vacuum(spark, gdir, keep = _ == "r2")
@@ -109,7 +107,7 @@ class SignatureStoreSpec extends SparkSpec {
   }
 
   test("an EMPTY release append vacuums its stale partition; a fresh store stays nonexistent") {
-    val dir = Files.createTempDirectory("sigstore_empty").toString + "/store"
+    val dir = LocalSession.tempDir("sigstore_empty").toString + "/store"
     val none = docs.where(lit(false))
     // fresh store + empty release: nothing written — no schema-less dir
     SignatureStore.append(spark, dir, "r1", none, "doc_id", "text")
@@ -131,7 +129,7 @@ class SignatureStoreSpec extends SparkSpec {
   }
 
   test("exact incremental keep: store hashes decontaminate without text") {
-    val dir = Files.createTempDirectory("sigstore_exact").toString + "/store"
+    val dir = LocalSession.tempDir("sigstore_exact").toString + "/store"
     SignatureStore.append(spark, dir, "r1", docs.where(!isNew), "doc_id", "text")
     val kept = SignatureStore.incrementalExactKeep(
       docs.where(isNew), "doc_id", "text", SignatureStore.read(spark, dir))

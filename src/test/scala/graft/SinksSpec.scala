@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -10,7 +9,7 @@ class SinksSpec extends SparkSpec {
   import spark.implicits._
 
   test("S6: CSV sink round-trips the processed dataset") {
-    val dir = Files.createTempDirectory("csv").toString + "/out"
+    val dir = LocalSession.tempDir("csv").toString + "/out"
     val df = Tables.supplierDaily(spark, sf)
       .withColumn("date", date_format($"date", "yyyy-MM-dd"))
     df.coalesce(1).write.option("header", "true").mode("overwrite").csv(dir)
@@ -32,7 +31,7 @@ class SinksSpec extends SparkSpec {
   test("ORC source/sink round-trip preserves schema and rows") {
     // second columnar at-rest format beside parquet (Spark-native ORC);
     // a store migration between the two must be lossless
-    val dir = Files.createTempDirectory("orc").toString + "/docs"
+    val dir = LocalSession.tempDir("orc").toString + "/docs"
     val docs = Tables.load(spark, sf, "documents")
     docs.write.mode("overwrite").orc(dir)
     val back = spark.read.orc(dir)
@@ -44,7 +43,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("S8/R10: partitioned chunk emit writes one directory per group key") {
-    val dir = Files.createTempDirectory("chunks").toString + "/out"
+    val dir = LocalSession.tempDir("chunks").toString + "/out"
     Tables.load(spark, sf, "orders")
       .withColumn("status", $"o_orderstatus")
       .write.mode("overwrite").partitionBy("status").parquet(dir)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.{GramStore, SignatureStore, StoreAudit}
@@ -19,7 +17,7 @@ class StoreAuditSpec extends SparkSpec {
   private val isNew = col("doc_id") % 10 >= 8
 
   test("healthy signature and gram stores audit to zero invariants") {
-    val dir = Files.createTempDirectory("audit_ok").toString
+    val dir = LocalSession.tempDir("audit_ok").toString
     SignatureStore.append(spark, s"$dir/sigs", "r1",
       docs.where(!isNew), "doc_id", "text")
     SignatureStore.append(spark, s"$dir/sigs", "r2",
@@ -53,7 +51,7 @@ class StoreAuditSpec extends SparkSpec {
   }
 
   test("an id stored under two releases is flagged on BOTH release rows — unless the tier opts out") {
-    val dir = Files.createTempDirectory("audit_dup").toString
+    val dir = LocalSession.tempDir("audit_dup").toString
     val overlap = docs.where(col("doc_id") % 10 < 2) // in r1 AND r2
     SignatureStore.append(spark, s"$dir/sigs", "r1",
       docs.where(!isNew), "doc_id", "text")
@@ -86,7 +84,7 @@ class StoreAuditSpec extends SparkSpec {
   }
 
   test("a stored id missing from the universe is flagged as an orphan") {
-    val dir = Files.createTempDirectory("audit_orph").toString
+    val dir = LocalSession.tempDir("audit_orph").toString
     SignatureStore.append(spark, s"$dir/sigs", "r1",
       docs.where(!isNew), "doc_id", "text")
     // universe loses some corpus ids (a truncated corpus table — the
@@ -106,7 +104,7 @@ class StoreAuditSpec extends SparkSpec {
   }
 
   test("a release-sliced universe pins per-release coverage: a dropped append is flagged on its release") {
-    val dir = Files.createTempDirectory("audit_miss").toString
+    val dir = LocalSession.tempDir("audit_miss").toString
     SignatureStore.append(spark, s"$dir/sigs", "r1",
       docs.where(!isNew), "doc_id", "text")
     // r2's append was LOST — the universe says both releases should sign

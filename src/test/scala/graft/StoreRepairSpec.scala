@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -56,7 +54,7 @@ class StoreRepairSpec extends SparkSpec {
   }
 
   test("the gate audits what the night touched: a takedown night aborts on a torn purged release; repair + rerun converge to the clean twin") {
-    val root = Files.createTempDirectory("repair_gate").toString
+    val root = LocalSession.tempDir("repair_gate").toString
     val idx = s"$root/index"
     val isTomb = col("vec_id") % 5 === 0
     val old = emb.where(!isEval && !isNew)
@@ -102,7 +100,7 @@ class StoreRepairSpec extends SparkSpec {
   }
 
   test("corruption in an UNTOUCHED release passes the release-bounded gate; the scheduled full card (q207) catches it; repairRelease heals") {
-    val root = Files.createTempDirectory("repair_unt").toString
+    val root = LocalSession.tempDir("repair_unt").toString
     val idx = s"$root/index"
     val old = emb.where(!isEval && !isNew)
     val fresh = emb.where(!isEval && isNew)
@@ -132,7 +130,7 @@ class StoreRepairSpec extends SparkSpec {
   }
 
   test("the release-bounded gate's scans partition-prune to the touched release and broadcast the delta") {
-    val root = Files.createTempDirectory("gate_plan").toString
+    val root = LocalSession.tempDir("gate_plan").toString
     val idx = s"$root/index"
     val old = emb.where(!isEval && !isNew)
     val fresh = emb.where(!isEval && isNew)
@@ -180,7 +178,7 @@ class StoreRepairSpec extends SparkSpec {
     import graft.pipeline.{GramStore, ReleaseBuild, SignatureStore}
     val docs = Tables.load(spark, sf, "documents")
     val isNewDoc = col("doc_id") % 10 >= 8
-    val dir = Files.createTempDirectory("repair_text").toString
+    val dir = LocalSession.tempDir("repair_text").toString
     SignatureStore.append(spark, s"$dir/sigs", "r1",
       docs.where(!isNewDoc), "doc_id", "text")
     SignatureStore.append(spark, s"$dir/sigs", "r2",
@@ -247,11 +245,11 @@ class StoreRepairSpec extends SparkSpec {
       GramStore.append(spark, s"$dir/grams", "rA", docsA, "text")
     }
     // never-torn history: A then B
-    val clean = Files.createTempDirectory("interleave_clean").toString
+    val clean = LocalSession.tempDir("interleave_clean").toString
     seed(clean)
     GramStore.append(spark, s"$clean/grams", "rB", docsB, "text")
     // torn history: A, tear A, B appends over the torn store, repair A
-    val torn = Files.createTempDirectory("interleave_torn").toString
+    val torn = LocalSession.tempDir("interleave_torn").toString
     seed(torn)
     val fs = new org.apache.hadoop.fs.Path(torn)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -288,7 +286,7 @@ class StoreRepairSpec extends SparkSpec {
   }
 
   test("repairRelease restores a torn CODE partition to the from-scratch store; other releases untouched") {
-    val root = Files.createTempDirectory("repair_codes").toString
+    val root = LocalSession.tempDir("repair_codes").toString
     val idx = s"$root/index"
     val old = emb.where(!isEval && !isNew)
     val fresh = emb.where(!isEval && isNew)

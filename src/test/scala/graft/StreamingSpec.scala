@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import graft.sources.Tables
@@ -11,7 +10,7 @@ class StreamingSpec extends SparkSpec {
 
   private lazy val landing: String = {
     // stage the events fixture as a landing directory with µs timestamps
-    val dir = Files.createTempDirectory("landing").toString
+    val dir = LocalSession.tempDir("landing").toString
     Tables.events(spark, sf).coalesce(1).write.mode("overwrite").parquet(dir)
     dir
   }
@@ -40,7 +39,7 @@ class StreamingSpec extends SparkSpec {
 
   test("watermarked dedup collapses duplicate deliveries to exactly-once") {
     // stage the landing dir with every event delivered twice (queue redelivery)
-    val dir = Files.createTempDirectory("landing_dup").toString
+    val dir = LocalSession.tempDir("landing_dup").toString
     val ev = Tables.events(spark, sf).limit(200)
     ev.unionAll(ev).coalesce(1).write.mode("overwrite").parquet(dir)
     val deduped = StreamEntry.dedupEvents(StreamEntry.readEvents(spark, dir))
@@ -55,7 +54,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming heavy hitters surface hot tokens with bounded state") {
     // skewed token stream: "hot" is ~1/3 of all tokens, the rest spread
     // over 400 distinct noise tokens — far under any shard's N/(k+1) bar
-    val dir = Files.createTempDirectory("landing_tokens").toString
+    val dir = LocalSession.tempDir("landing_tokens").toString
     val toks = (1 to 3000).map { i =>
       if (i % 3 == 0) "hot" else s"noise${i % 400}"
     }
@@ -102,8 +101,8 @@ class StreamingSpec extends SparkSpec {
     // the reference's queue -> DB ingestion: micro-batches land through
     // foreachBatch into EavStore.upsert; at-least-once redelivery (the
     // doubled landing dir) must still converge to exactly the batch store
-    val dir = Files.createTempDirectory("landing_eav").toString
-    val store = Files.createTempDirectory("eav_store").toString + "/store"
+    val dir = LocalSession.tempDir("landing_eav").toString
+    val store = LocalSession.tempDir("eav_store").toString + "/store"
     val ev = Tables.events(spark, sf).limit(300)
     ev.unionAll(ev).coalesce(2).write.mode("overwrite").parquet(dir)
     def toEav(df: org.apache.spark.sql.DataFrame) = df.select(
@@ -131,8 +130,8 @@ class StreamingSpec extends SparkSpec {
     // slice. Batch 2 must be deduped against batch 1's PERSISTED signatures
     // (content hashes — no re-read of batch 1's text), so its kept set is
     // exactly the q121_incremental_exact batch twin.
-    val dir = Files.createTempDirectory("landing_docs").toString
-    val store = Files.createTempDirectory("sig_store").toString + "/store"
+    val dir = LocalSession.tempDir("landing_docs").toString
+    val store = LocalSession.tempDir("sig_store").toString + "/store"
     val docs = Tables.load(spark, sf, "documents")
     val isNew = col("doc_id") % 10 >= 8
     docs.where(!isNew).coalesce(1).write.parquet(s"$dir/old")
@@ -191,7 +190,7 @@ class StreamingSpec extends SparkSpec {
     // train ONCE on the prior release; serve the new slice
     val vocab = graft.operators.TextAnalysis.bpeVocab(docs.where(!isNew),
       "text", rounds = 4).cache()
-    val dir = Files.createTempDirectory("tokstream").toString
+    val dir = LocalSession.tempDir("tokstream").toString
     val newDocs = docs.where(isNew)
     newDocs.where(col("doc_id") % 20 < 10).coalesce(1).write.parquet(s"$dir/in/a")
     newDocs.where(col("doc_id") % 20 >= 10).coalesce(1).write.parquet(s"$dir/in/b")
@@ -226,7 +225,7 @@ class StreamingSpec extends SparkSpec {
       graft.operators.Similarity.cellCentroids(emb.where(!isEval),
         "embedding", "label"),
       nProbe = 2).cache()
-    val dir = Files.createTempDirectory("decontstream").toString
+    val dir = LocalSession.tempDir("decontstream").toString
     val corpus = emb.where(!isEval)
     corpus.where(col("vec_id") % 2 === 0).coalesce(1).write.parquet(s"$dir/in/a")
     corpus.where(col("vec_id") % 2 === 1).coalesce(1).write.parquet(s"$dir/in/b")
@@ -257,7 +256,7 @@ class StreamingSpec extends SparkSpec {
     val w = graft.operators.Classifier.trainWeights(docs.where(!isNew),
       "doc_id", "text", col("lang") === "en", d = 256, iters = 2, lr = 0.5)
     val dense = graft.operators.Classifier.denseWeights(w, 256)
-    val dir = Files.createTempDirectory("scorestream").toString
+    val dir = LocalSession.tempDir("scorestream").toString
     docs.where(isNew).write.parquet(s"$dir/new")
     val scored = StreamEntry.scoreDocs(
       spark.readStream.schema(StreamEntry.docSchema).parquet(s"$dir/new"),
@@ -286,7 +285,7 @@ class StreamingSpec extends SparkSpec {
     val store = graft.pipeline.GramStore.grams(docs.where(!isNew), "text")
       .cache()
     val stop = Seq("the", "a", "of", "to", "in", "and")
-    val dir = Files.createTempDirectory("gatestream").toString
+    val dir = LocalSession.tempDir("gatestream").toString
     val newDocs = docs.where(isNew)
     newDocs.where(col("doc_id") % 20 < 10).coalesce(1).write.parquet(s"$dir/in/a")
     newDocs.where(col("doc_id") % 20 >= 10).coalesce(1).write.parquet(s"$dir/in/b")
@@ -317,7 +316,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming decontamination scrub equals the q174 batch twin") {
     val docs = Tables.load(spark, sf, "documents")
     val bench = docs.where(col("doc_id") < 5).cache()
-    val dir = Files.createTempDirectory("scrubstream").toString
+    val dir = LocalSession.tempDir("scrubstream").toString
     val corpus = docs.where(col("doc_id") >= 5)
     corpus.where(col("doc_id") % 2 === 0).coalesce(1).write.parquet(s"$dir/in/a")
     corpus.where(col("doc_id") % 2 === 1).coalesce(1).write.parquet(s"$dir/in/b")
@@ -349,7 +348,7 @@ class StreamingSpec extends SparkSpec {
     val isNew = col("vec_id") % 10 >= 8
     val cb = graft.operators.Similarity.pqCodebooks(emb.where(!isNew),
       "vec_id", "embedding", dim = 64, m = 16, ksub = 8, iters = 3)
-    val dir = Files.createTempDirectory("pqstream").toString
+    val dir = LocalSession.tempDir("pqstream").toString
     // two micro-batches in a fixed order (the ingestDocs file trick)
     val newHalf = emb.where(isNew)
     newHalf.where(col("vec_id") % 20 < 10).coalesce(1).write.parquet(s"$dir/in/a")
@@ -383,7 +382,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming index append grows the frozen IVFADC store to the batch answer") {
     val emb = Tables.load(spark, sf, "embeddings")
     val isNew = col("vec_id") % 10 >= 8
-    val dir = Files.createTempDirectory("idxstream").toString
+    val dir = LocalSession.tempDir("idxstream").toString
     val store = s"$dir/index"
     // seed index: trained and encoded on the OLD slice only (the q146 build)
     graft.pipeline.IndexStore.build(spark, store, emb.where(!isNew),
@@ -436,7 +435,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming serving equals the batch frozen-store serve; replay converges") {
     val emb = Tables.load(spark, sf, "embeddings")
-    val dir = Files.createTempDirectory("servestream").toString
+    val dir = LocalSession.tempDir("servestream").toString
     val store = s"$dir/index"
     graft.pipeline.IndexStore.build(spark, store, emb, "vec_id", "embedding",
       dim = 64, kCoarse = 8, coarseIters = 4, m = 16, ksub = 8, iters = 3,
@@ -477,7 +476,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming takedown tombstones the store; serving excludes; replay idempotent") {
     val emb = Tables.load(spark, sf, "embeddings")
-    val dir = Files.createTempDirectory("tombstream").toString
+    val dir = LocalSession.tempDir("tombstream").toString
     val store = s"$dir/index"
     graft.pipeline.IndexStore.build(spark, store, emb, "vec_id", "embedding",
       dim = 64, kCoarse = 8, coarseIters = 4, m = 16, ksub = 8, iters = 3,
@@ -521,7 +520,7 @@ class StreamingSpec extends SparkSpec {
     val docs = Tables.load(spark, sf, "documents")
     val isNew = col("doc_id") % 10 >= 8
     val isTomb = col("doc_id") % 9 === 2
-    val dir = Files.createTempDirectory("tkdtextstream").toString
+    val dir = LocalSession.tempDir("tkdtextstream").toString
     // identical two-release prior-night stores for the stream side and the
     // batch side
     for (side <- Seq("s", "b"); (rel, half) <- Seq(
@@ -584,7 +583,7 @@ class StreamingSpec extends SparkSpec {
     // without waiting for a batch night
     val docs = Tables.load(spark, sf, "documents")
     val emb = Tables.load(spark, sf, "embeddings")
-    val dir = Files.createTempDirectory("xtierstream").toString
+    val dir = LocalSession.tempDir("xtierstream").toString
     graft.pipeline.SignatureStore.append(spark, s"$dir/sigs", "r0",
       docs, "doc_id", "text")
     graft.pipeline.GramStore.append(spark, s"$dir/grams", "r0", docs, "text")
@@ -631,7 +630,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming graph roll-forward equals the from-scratch union graph; replay converges") {
     val emb = Tables.load(spark, sf, "embeddings")
     val isNew = col("vec_id") % 10 >= 8
-    val dir = Files.createTempDirectory("graphstream").toString
+    val dir = LocalSession.tempDir("graphstream").toString
     val cents = graft.operators.Similarity.kMeansCentroids(emb.where(!isNew),
       "vec_id", "embedding", 8, 4)
     def nodes(d: org.apache.spark.sql.DataFrame) =
@@ -694,7 +693,7 @@ class StreamingSpec extends SparkSpec {
     def cands(d: org.apache.spark.sql.DataFrame) =
       d.select(col("vec_id").cast("long").as("cand_id"),
         col("embedding").cast("array<double>").as("cand_emb"))
-    val dir = Files.createTempDirectory("maintstream").toString
+    val dir = LocalSession.tempDir("maintstream").toString
     val idx = s"$dir/index"
     // a DEGENERATE initial store (kc2 vs the target 8 cells) — batch 1 of
     // the stream must heal it, later batches must roll forward healthily
@@ -803,7 +802,7 @@ class StreamingSpec extends SparkSpec {
     def cands(d: org.apache.spark.sql.DataFrame) =
       d.select(col("vec_id").cast("long").as("cand_id"),
         col("embedding").cast("array<double>").as("cand_emb"))
-    val dir = Files.createTempDirectory("repairstream").toString
+    val dir = LocalSession.tempDir("repairstream").toString
     val idx = s"$dir/index"
     // a HEALTHY store at the target geometry — no heal, so only the
     // deep-audit cadence can surface the tear

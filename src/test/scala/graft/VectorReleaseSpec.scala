@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -29,7 +27,7 @@ class VectorReleaseSpec extends SparkSpec {
       col("embedding").cast("array<double>").as("cand_emb"))
 
   test("roll-forward equals the from-scratch union build; rerun is disk-idempotent") {
-    val root = Files.createTempDirectory("vrel").toString
+    val root = LocalSession.tempDir("vrel").toString
     val idx = s"$root/index"
     val graphPath = s"$root/graph"
     val old = emb.where(!isEval && !isNew)
@@ -94,7 +92,7 @@ class VectorReleaseSpec extends SparkSpec {
   }
 
   test("maintain realizes takedowns: scrub+repair equals the from-scratch servable graph; store purged") {
-    val root = Files.createTempDirectory("vrel_tkd").toString
+    val root = LocalSession.tempDir("vrel_tkd").toString
     val idx = s"$root/index"
     val old = emb.where(!isEval && !isNew)
     val fresh = emb.where(!isEval && isNew)
@@ -136,7 +134,7 @@ class VectorReleaseSpec extends SparkSpec {
   }
 
   test("purgeBacklog defers physical reclamation: a below-threshold night keeps the list (serving stays scrubbed); crossing the dial purges and resets") {
-    val root = Files.createTempDirectory("vrel_dial").toString
+    val root = LocalSession.tempDir("vrel_dial").toString
     val idx = s"$root/index"
     val old = emb.where(!isEval && !isNew)
     val fresh = emb.where(!isEval && isNew)
@@ -195,7 +193,7 @@ class VectorReleaseSpec extends SparkSpec {
   }
 
   test("the nightly gate aborts a delta that re-appends ids a prior release already stores") {
-    val root = Files.createTempDirectory("vrel_dup").toString
+    val root = LocalSession.tempDir("vrel_dup").toString
     val idx = s"$root/index"
     val old = emb.where(!isEval && !isNew)
     IndexStore.build(spark, idx, old, "vec_id", "embedding",
@@ -225,7 +223,7 @@ class VectorReleaseSpec extends SparkSpec {
   }
 
   test("a clean night's dup audit clears every prior release from sketches alone — no prior release's files are read") {
-    val root = Files.createTempDirectory("vrel_sketch").toString
+    val root = LocalSession.tempDir("vrel_sketch").toString
     val idx = s"$root/index"
     val old = emb.where(!isEval && !isNew)
     val fresh = emb.where(!isEval && isNew)
@@ -250,7 +248,7 @@ class VectorReleaseSpec extends SparkSpec {
   }
 
   test("a release without a sketch (pre-sketch store) falls back to the scan — conservatively, and with the same answers") {
-    val root = Files.createTempDirectory("vrel_nosketch").toString
+    val root = LocalSession.tempDir("vrel_nosketch").toString
     val idx = s"$root/index"
     val old = emb.where(!isEval && !isNew)
     val fresh = emb.where(!isEval && isNew)
@@ -280,7 +278,7 @@ class VectorReleaseSpec extends SparkSpec {
     // codes still hold the un-purged tombstoned rows while the corpus and
     // the rebuilt int8 tier are scrubbed. The cards must anti-join the
     // pinned list out of both sides instead of aborting a healthy night.
-    val root = Files.createTempDirectory("vrel_defer_stale").toString
+    val root = LocalSession.tempDir("vrel_defer_stale").toString
     val idx = s"$root/index"
     val old = emb.where(!isEval && !isNew)
     val fresh = emb.where(!isEval && isNew)
@@ -312,7 +310,7 @@ class VectorReleaseSpec extends SparkSpec {
   }
 
   test("deepAuditEvery mechanizes the scheduled full card: untouched corruption survives k-1 nights, aborts the k-th, repair re-arms; a dial-crossing purge forces it early") {
-    val root = Files.createTempDirectory("vrel_deep").toString
+    val root = LocalSession.tempDir("vrel_deep").toString
     val idx = s"$root/index"
     val old = emb.where(!isEval && !isNew)
     val fresh1 = emb.where(!isEval && isNew && col("vec_id") % 2 === 0)
@@ -388,7 +386,7 @@ class VectorReleaseSpec extends SparkSpec {
   }
 
   test("purgeBudgetBytes: the byte-denominated dial defers at the budget and purges just under it") {
-    val root = Files.createTempDirectory("vrel_bytes").toString
+    val root = LocalSession.tempDir("vrel_bytes").toString
     val idx = s"$root/index"
     val old = emb.where(!isEval && !isNew)
     val fresh = emb.where(!isEval && isNew)
@@ -430,7 +428,7 @@ class VectorReleaseSpec extends SparkSpec {
     val old = emb.where(!isEval && !isNew)
     val fresh = emb.where(!isEval && isNew)
     def mkStore(kc: Int): String = {
-      val idx = Files.createTempDirectory("vmnt").toString + "/index"
+      val idx = LocalSession.tempDir("vmnt").toString + "/index"
       IndexStore.build(spark, idx, old, "vec_id", "embedding",
         dim = 64, kCoarse = kc, coarseIters = 4, m = 16, ksub = 8,
         iters = 3, release = "r1")
@@ -526,7 +524,7 @@ class VectorReleaseSpec extends SparkSpec {
       col("vec_id").cast("long").as("cand_id"),
       col("embedding").cast("array<double>").as("cand_emb"))
     def mkStore(kc: Int): String = {
-      val idx = Files.createTempDirectory("vmnt8").toString + "/index"
+      val idx = LocalSession.tempDir("vmnt8").toString + "/index"
       IndexStore.build(spark, idx, old, "vec_id", "embedding",
         dim = 64, kCoarse = kc, coarseIters = 4, m = 16, ksub = 8,
         iters = 3, release = "r1")
@@ -603,7 +601,7 @@ class VectorReleaseSpec extends SparkSpec {
     val old = emb.where(!isEval && !isNew)
     val fresh = emb.where(!isEval && isNew)
     def mkStore(kc: Int): String = {
-      val idx = Files.createTempDirectory("vmntq").toString + "/index"
+      val idx = LocalSession.tempDir("vmntq").toString + "/index"
       IndexStore.build(spark, idx, old, "vec_id", "embedding",
         dim = 64, kCoarse = kc, coarseIters = 4, m = 16, ksub = 8,
         iters = 3, release = "r1", opq = true)
@@ -674,7 +672,7 @@ class VectorReleaseSpec extends SparkSpec {
     // generation bump, nights 1 and 3 take the incremental merge path, and
     // the final store/graph/drop artifacts must equal a from-scratch build
     // on the full union: no drift accumulates across nights.
-    val root = Files.createTempDirectory("vsoak").toString
+    val root = LocalSession.tempDir("vsoak").toString
     val idx = s"$root/index"
     val graphPath = s"$root/graph"
     val m10 = col("vec_id") % 10

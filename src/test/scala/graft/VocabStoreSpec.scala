@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.operators.TextAnalysis
 import graft.pipeline.VocabStore
 import graft.sources.Tables
@@ -16,7 +14,7 @@ class VocabStoreSpec extends SparkSpec {
   private lazy val docs = Tables.load(spark, sf, "documents")
 
   test("counting from the read-back vocab equals the inline q143 answer") {
-    val dir = Files.createTempDirectory("vocabstore").toString + "/bpe"
+    val dir = LocalSession.tempDir("vocabstore").toString + "/bpe"
     VocabStore.build(spark, dir, docs, "text", rounds = 6)
     val fromDisk = VocabStore.countTokens(spark, dir, docs, "doc_id", "text")
     val inline = TextAnalysis.bpeTokenCounts(docs, "doc_id", "text", rounds = 6)
@@ -25,7 +23,7 @@ class VocabStoreSpec extends SparkSpec {
   }
 
   test("one build persists BOTH artifacts; merges equal the q142 trajectory") {
-    val dir = Files.createTempDirectory("vocabstore_m").toString + "/bpe"
+    val dir = LocalSession.tempDir("vocabstore_m").toString + "/bpe"
     VocabStore.build(spark, dir, docs, "text", rounds = 6)
     val storedMerges = VocabStore.readMerges(spark, dir)
       .orderBy("round").as[(Int, String, Long)].collect().toList
@@ -38,7 +36,7 @@ class VocabStoreSpec extends SparkSpec {
   }
 
   test("rebuild replaces the artifact (a tokenizer IS its training run)") {
-    val dir = Files.createTempDirectory("vocabstore_rb").toString + "/bpe"
+    val dir = LocalSession.tempDir("vocabstore_rb").toString + "/bpe"
     VocabStore.build(spark, dir, docs, "text", rounds = 6)
     val once = VocabStore.readVocab(spark, dir).count()
     // retrain on a DIFFERENT (two-word) corpus: replaced, never merged

@@ -1,10 +1,8 @@
 package graft.pipeline
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{LocalSession, SparkSpec}
 import graft.sources.Tables
 
 /** The takedown-vs-maintenance RACE contract: `StreamEntry.deleteIds`
@@ -33,7 +31,7 @@ class TombstoneRaceSpec extends SparkSpec {
   }
 
   test("delete APPENDS an id file — earlier files are never rewritten") {
-    val dir = Files.createTempDirectory("tomb_race1").toString + "/index"
+    val dir = LocalSession.tempDir("tomb_race1").toString + "/index"
     IndexStore.build(spark, dir, emb, "vec_id", "embedding",
       dim = 64, kCoarse = 8, coarseIters = 4, m = 16, ksub = 8,
       iters = 3, release = "r1")
@@ -55,7 +53,7 @@ class TombstoneRaceSpec extends SparkSpec {
   }
 
   test("clearTombstones subtracts only the pinned snapshot — a raced-in delete survives") {
-    val dir = Files.createTempDirectory("tomb_race2").toString + "/index"
+    val dir = LocalSession.tempDir("tomb_race2").toString + "/index"
     IndexStore.build(spark, dir, emb, "vec_id", "embedding",
       dim = 64, kCoarse = 8, coarseIters = 4, m = 16, ksub = 8,
       iters = 3, release = "r1")
@@ -79,7 +77,7 @@ class TombstoneRaceSpec extends SparkSpec {
   }
 
   test("a corrupted tombstone list fails LOUDLY, never open") {
-    val dir = Files.createTempDirectory("tomb_corrupt").toString + "/index"
+    val dir = LocalSession.tempDir("tomb_corrupt").toString + "/index"
     IndexStore.build(spark, dir, emb, "vec_id", "embedding",
       dim = 64, kCoarse = 8, coarseIters = 4, m = 16, ksub = 8,
       iters = 3, release = "r1")
@@ -105,7 +103,7 @@ class TombstoneRaceSpec extends SparkSpec {
   }
 
   test("a delete racing into purge stays excluded and the next purge reclaims it") {
-    val dir = Files.createTempDirectory("tomb_race3").toString + "/index"
+    val dir = LocalSession.tempDir("tomb_race3").toString + "/index"
     IndexStore.build(spark, dir, emb, "vec_id", "embedding",
       dim = 64, kCoarse = 8, coarseIters = 4, m = 16, ksub = 8,
       iters = 3, release = "r1")
