@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  /** The warmup every timing main (Bench, BenchSome, ProfileSome) runs before
+  /** The warmup every timing main (Bench, ProfileSome) runs before
     * its first timed query, so their readings compare. */
   def warmup(spark: SparkSession, sfDir: String): Unit = {
     // Warm the session (codegen paths, parquet listings/footers) so the first
@@ -29,8 +29,19 @@ object Bench {
       .write.mode("overwrite").format("noop").save()
   }
 
+  /** `runMain graft.Bench [query ...]` times every registered query in
+    * sorted-name order, or only the named ones in the order given (an
+    * unknown name fails before anything runs). A named run writes no
+    * BENCH_FULL/STEADY.json, so the full-surface artifacts are only ever
+    * written by a full run. */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val names = args.toSeq.distinct
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val selected =
+      if (names.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)
+      else names.map(n => n -> SparkEntry.queries(n))
     val spark = LocalSession.create()
     // Quiet the WARN-level DAGScheduler noise (large-task-binary etc.) so the
     // driver's bounded tail capture is not flooded between the per-query runs
@@ -42,7 +53,7 @@ object Bench {
       // read-only store builds, a steady second pass legitimately records
       // ~0 for them (memoized) while mutating queries rebuild per pass
       graft.queries.VectorQueries.fixtureBuildSec.clear()
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      selected.map { case (name, fn) =>
         val t0 = System.nanoTime()
         // noop sink forces full materialization of every output column —
         // count() would let Catalyst prune the projection work away.
@@ -86,46 +97,39 @@ object Bench {
     //  - the final summary line inlines the HEAVIEST queries' seconds, as
     //    many as fit a hard 1900-byte line budget (covers >90% of total
     //    seconds; the sub-second tail is bench noise and lives in the
-    //    chunks and the artifact file). SPARK_GRAFT_BENCH_QMAP=full forces
-    //    the complete map inline (for local A/Bs); =none restores the r14
-    //    empty-map line.
+    //    chunks and the artifact file).
     val qsMd5 = java.security.MessageDigest.getInstance("MD5")
       .digest(qs.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val artifact = if (passes > 1) "BENCH_STEADY.json" else "BENCH_FULL.json"
+    val artifact =
+      if (names.nonEmpty) None
+      else Some(if (passes > 1) "BENCH_STEADY.json" else "BENCH_FULL.json")
     def entry(kv: (String, Double)): String = s""""${kv._1}":${d3(kv._2)}"""
-    val qmapMode = sys.env.getOrElse("SPARK_GRAFT_BENCH_QMAP", "fit")
-    if (qmapMode != "none") {
-      val chunks = results.grouped(30).toSeq
-      chunks.zipWithIndex.foreach { case (g, i) =>
-        println(s"""{"metric":"queries_chunk","part":${i + 1},""" +
-          s""""of":${chunks.size},"queries":${g.map(entry)
-            .mkString("{", ",", "}")}}""")
-      }
+    val chunks = results.grouped(30).toSeq
+    chunks.zipWithIndex.foreach { case (g, i) =>
+      println(s"""{"metric":"queries_chunk","part":${i + 1},""" +
+        s""""of":${chunks.size},"queries":${g.map(entry)
+          .mkString("{", ",", "}")}}""")
     }
     // `queries_inlined` counts the entries of the inline map, so a parser
-    // can tell the fit mode's heaviest-first subset from the full map that
+    // can tell the heaviest-first subset from the full map that
     // `queries_md5` hashes
     def lineOf(qmap: String, inlined: Int): String =
       s"""{"metric":"total","value":${d3(total)},"unit":"sec",""" +
         s""""queries":$qmap,"queries_inlined":$inlined,"n_queries":${results.size},""" +
-        s""""n_failed":$nFailed,"queries_md5":"$qsMd5","detail":"$artifact","sf":"$sfDir"}"""
-    val (inlined, nInlined) = qmapMode match {
-      case "none" => ("{}", 0)
-      case "full" => (qs, results.size)
-      case _ => // heaviest-first greedy fill under the line budget
-        // (the count's width is bounded by the full map's)
-        val room = 1900 - lineOf("{}", results.size).length
-        val acc = new StringBuilder
-        var n = 0
-        results.sortBy(-_._2).foreach { kv =>
-          val e = entry(kv)
-          if (acc.length + e.length + 1 <= room) {
-            if (acc.nonEmpty) acc.append(','); acc.append(e); n += 1
-          }
-        }
-        (s"{$acc}", n)
+        s""""n_failed":$nFailed,"queries_md5":"$qsMd5",""" +
+        s""""detail":${artifact.fold("null")(a => s""""$a"""")},"sf":"$sfDir"}"""
+    // heaviest-first greedy fill under the line budget (the count's width
+    // is bounded by the full map's)
+    val room = 1900 - lineOf("{}", results.size).length
+    val inlined = new StringBuilder
+    var nInlined = 0
+    results.sortBy(-_._2).foreach { kv =>
+      val e = entry(kv)
+      if (inlined.length + e.length + 1 <= room) {
+        if (inlined.nonEmpty) inlined.append(','); inlined.append(e); nInlined += 1
+      }
     }
-    println(lineOf(inlined, nInlined))
+    println(lineOf(s"{$inlined}", nInlined))
     // Attribution for the store-MUTATING queries whose in-harness fixture
     // builds (prior index/graph/degenerate store — PERSISTED state in
     // production) cannot share the frozen read-only fixture: the artifact
@@ -138,8 +142,8 @@ object Bench {
     }
     val full = s"""{"metric":"total","value":${d3(total)},"unit":"sec",""" +
       s""""queries":$qs,"fixture_build":$fbJson,"sf":"$sfDir"}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(artifact),
-      (full + "\n").getBytes("UTF-8"))
+    artifact.foreach(a => java.nio.file.Files.write(java.nio.file.Paths.get(a),
+      (full + "\n").getBytes("UTF-8")))
     spark.stop()
   }
 }

@@ -1,12 +1,13 @@
 package graft
 
 import scala.collection.mutable
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Per-action profiler for optimization work: runs the named queries like
-  * [[BenchSome]] (noop sink, second pass = steady state) but registers a
-  * listener that attributes every Spark job to its call site and every
-  * stage to its shuffle read/write volume — the breakdown the Spark UI
+  * a named [[Bench]] run (noop sink, second pass = steady state) but
+  * registers a listener that attributes every Spark job to its call site
+  * and every stage to its shuffle read/write volume — the breakdown the Spark UI
   * would give, printed as text the session can read (the UI is disabled in
   * this environment). Output per query: wall seconds, then the job table
   * (seconds, callsite) sorted by cost, then the heaviest stages with
@@ -82,11 +83,9 @@ object ProfileSome {
       SparkEntry.queries(name)(spark, sfDir)
         .write.mode("overwrite").format("noop").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      // let the listener bus drain before reading the collections (the
-      // sleep is a heuristic; the reads below additionally take the same
-      // monitors the listener writes under, so a slow drain can at worst
-      // drop a late event, never tear a read)
-      Thread.sleep(300)
+      // every event of the query's jobs reaches the listener before it is
+      // removed and the collections are read
+      ListenerBusDrain.drain(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
       if (pass == passes) {
         println(f"==== $name pass$pass wall=$wall%.2fs " +

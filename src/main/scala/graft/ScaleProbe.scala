@@ -720,19 +720,9 @@ object ScaleProbe {
             graft.pipeline.IndexStore.append(spark, p, fresh, "vec_id",
               "embedding", "r2")
             graft.pipeline.IndexStore.appendRerank(spark, p, cands(fresh), "r2")
-            val fs = new org.apache.hadoop.fs.Path(p)
-              .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            def tear(): Unit = {
-              val root = new org.apache.hadoop.fs.Path(s"$p/rerank/codes")
-              fs.listStatus(root)
-                .filter(st => st.isDirectory &&
-                  st.getPath.getName.startsWith("cell="))
-                .map(st =>
-                  new org.apache.hadoop.fs.Path(st.getPath, "release=r2"))
-                .filter(fs.exists)
-                .foreach(x => require(fs.delete(x, true), s"tear failed: $x"))
-              spark.catalog.refreshByPath(s"$p/rerank/codes")
-            }
+            def tear(): Unit =
+              graft.pipeline.PartitionDirs.drop(spark, s"$p/rerank/codes",
+                graft.pipeline.IndexStore.CodeCols, _.last != "r2")
             def parity = graft.pipeline.StoreAudit.card("rerank_int8",
               graft.pipeline.IndexStore.readRerankCodes(spark, p), "cand_id",
               graft.pipeline.IndexStore.readCodes(spark, p)
@@ -787,15 +777,9 @@ object ScaleProbe {
                 lit("r1").as("release"))
               .unionByName(delta.select(col("doc_id"), lit("r2").as("release")))
             val stored = d.where(!isNew || isDelta)
-            val fs = new org.apache.hadoop.fs.Path(p)
-              .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            def tear(): Unit = {
-              Seq(s"$p/sigs/release=r2", s"$p/grams/release=r2").foreach { x =>
-                require(fs.delete(new org.apache.hadoop.fs.Path(x), true),
-                  s"tear failed: $x")
-              }
-              spark.catalog.refreshByPath(s"$p/sigs")
-              spark.catalog.refreshByPath(s"$p/grams")
+            def tear(): Unit = Seq(s"$p/sigs", s"$p/grams").foreach { x =>
+              require(graft.pipeline.PartitionDirs
+                .vacuumReleases(spark, x, _ != "r2").nonEmpty, s"tear failed: $x")
             }
             def cards = graft.pipeline.StoreAudit.card("signatures",
                 graft.pipeline.SignatureStore.read(spark, s"$p/sigs"),

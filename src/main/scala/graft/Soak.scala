@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.{EavStore, MainPipeline}
+import graft.pipeline.{EavStore, MainPipeline, PartitionDirs}
 
 /** Scale soak: run the full pipeline at the given SF, upsert the ~15M-row EAV
   * output into the partitioned store, re-upsert a second release on top, and
@@ -51,10 +51,7 @@ object Soak {
       s"partition pruning failed: scan for '$target' read $p partitions"))
     // With a single-partition store a pruned scan legitimately reads every
     // file, so the strict inequality only applies when there is >1 partition.
-    // Partition count comes free from the already-listed file paths — no
-    // extra store scan.
-    val nParts = storeFiles
-      .flatMap(_.split("/").find(_.startsWith("partition_id="))).distinct.length
+    val nParts = PartitionDirs.list(spark, store, EavStore.PartitionCols).length
     require(filesRead > 0 && (nParts <= 1 || filesRead < totalFiles),
       s"partition pruning failed: read $filesRead of $totalFiles files ($nParts partitions)")
     println(s"[soak] partition '$target' rows=$prunedCount; scan read " +

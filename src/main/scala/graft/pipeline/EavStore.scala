@@ -58,7 +58,7 @@ object EavStore {
     *     lineage and fails the write before its commit, leaving the store as
     *     it was (dynamic overwrite swaps partitions at commit); re-run it. */
   def upsert(spark: SparkSession, df: DataFrame, path: String): Unit = {
-    val stored = partitionDirs(spark, path).map(d => partitionValue(d.getName)).toSet
+    val stored = PartitionDirs.list(spark, path, PartitionCols).map(_.values.head).toSet
     val shape = nullable(df.schema).asInstanceOf[StructType]
     recordedSchema(spark, path) match {
       case Some(rec) => require(rec == shape,
@@ -112,7 +112,7 @@ object EavStore {
   val SchemaFile = "_schema.json"
 
   private def recordedSchema(spark: SparkSession, path: String): Option[StructType] = {
-    val in = try Some(hadoopFs(spark, path).open(new Path(path, SchemaFile)))
+    val in = try Some(PartitionDirs.fs(spark, path).open(new Path(path, SchemaFile)))
       catch { case _: java.io.FileNotFoundException => None }
     in.map { s =>
       try DataType.fromJson(new String(s.readAllBytes(), UTF_8)).asInstanceOf[StructType]
@@ -123,7 +123,7 @@ object EavStore {
   /** Written under a temporary name and renamed, so a crash mid-write
     * leaves no partial record. */
   private def writeSchema(spark: SparkSession, path: String, schema: StructType): Unit = {
-    val fs = hadoopFs(spark, path)
+    val fs = PartitionDirs.fs(spark, path)
     val tmp = new Path(path, s"$SchemaFile.tmp")
     val out = fs.create(tmp, true)
     try out.write(schema.prettyJson.getBytes(UTF_8)) finally out.close()
@@ -157,10 +157,10 @@ object EavStore {
   def compact(spark: SparkSession, path: String,
               maxFiles: Int = FilesPerPartition): Seq[String] = {
     require(maxFiles > 0, s"maxFiles must be positive, got $maxFiles")
-    val fs = hadoopFs(spark, path)
-    val fragmented = partitionDirs(spark, path).collect {
-      case d if fs.listStatus(d).count(_.getPath.getName.endsWith(".parquet")) > maxFiles =>
-        partitionValue(d.getName)
+    val fs = PartitionDirs.fs(spark, path)
+    val fragmented = PartitionDirs.list(spark, path, PartitionCols).collect {
+      case l if fs.listStatus(l.path).count(_.getPath.getName.endsWith(".parquet")) > maxFiles =>
+        l.values.head
     }
     if (fragmented.nonEmpty) {
       val slice = read(spark, path)
@@ -179,54 +179,18 @@ object EavStore {
   /** Retention vacuum: physically drops every store partition whose value
     * fails `keep` — how a release-versioned store stays bounded (the
     * reference deletes old release partitions the same way, via dropped
-    * partition tables). A pure metadata/filesystem operation: no data is
-    * read or shuffled. Returns the partition values dropped. */
+    * partition tables). A pure metadata/filesystem operation
+    * ([[PartitionDirs.drop]]): no data is read or shuffled. Returns the
+    * partition values dropped. */
   def vacuum(spark: SparkSession, path: String,
-             keep: String => Boolean): Seq[String] = {
-    val fs = hadoopFs(spark, path)
-    partitionDirs(spark, path)
-      .filterNot(d => keep(partitionValue(d.getName)))
-      .map { d =>
-        // fs.delete reports failure by RETURNING false, not throwing — a
-        // silently-failed delete must not be recorded as dropped
-        require(fs.delete(d, true), s"vacuum failed to delete $d")
-        partitionValue(d.getName)
-      }
-  }
+             keep: String => Boolean): Seq[String] =
+    PartitionDirs.drop(spark, path, PartitionCols, v => keep(v.head)).map(_.head)
+
+  /** The store's one partition column. */
+  private[graft] val PartitionCols = Seq("partition_id")
 
   /** Dynamic partition overwrite: replaces only the partitions `df` holds. */
   private def overwrite(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("partition_id").parquet(path)
-
-  private def hadoopFs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def partitionDirs(spark: SparkSession, path: String): Seq[Path] = {
-    val p = new Path(path)
-    val fs = hadoopFs(spark, path)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("partition_id="))
-      .map(_.getPath)
-  }
-
-  /** Decode a `partition_id=<escaped>` directory name back to its value.
-    * Spark/Hive path escaping is %xx percent-encoding ONLY — unlike
-    * URLDecoder it never turns `+` into a space (a literal `+` in a
-    * partition value is written unescaped, and URLDecoder would corrupt it,
-    * making vacuum delete or keep the wrong partitions). */
-  private def partitionValue(dirName: String): String = {
-    val s = dirName.stripPrefix("partition_id=")
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length) {
-        sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-        i += 3
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
+      .partitionBy(PartitionCols: _*).parquet(path)
 }

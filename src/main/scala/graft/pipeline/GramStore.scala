@@ -82,12 +82,12 @@ object GramStore {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("release")
         .parquet(path)
-      ReleasePartitions.writeSketch(spark, s"$path/$SketchDir", release, novel)
+      PartitionDirs.writeSketch(spark, s"$path/$SketchDir", release, novel)
     }
   }
 
   /** Per-release kilobyte GRAM SKETCHES — the
-    * [[ReleasePartitions.writeSketch]] sidecar of each partition's stored
+    * [[PartitionDirs.writeSketch]] sidecar of each partition's stored
     * `gram_h`s, under `_sketch/` (underscore-prefixed, so [[read]]'s
     * partition discovery never sees it). They serve one caller —
     * [[ReleaseBuild.rollForwardOnDisk]]'s gram-layout audit, which must
@@ -101,14 +101,14 @@ object GramStore {
   private val SketchDir = "_sketch"
 
   def readSketches(spark: SparkSession, path: String): Map[String, Array[Byte]] =
-    ReleasePartitions.readSketches(spark, s"$path/$SketchDir")
+    PartitionDirs.readSketches(spark, s"$path/$SketchDir")
 
   /** The releases (excluding `exclude`) that MIGHT hold any of
-    * `deltaGrams`' hashes ([[ReleasePartitions.sketchHitReleases]]). */
+    * `deltaGrams`' hashes ([[PartitionDirs.sketchHitReleases]]). */
   def sketchHitReleases(spark: SparkSession, path: String,
                         deltaGrams: DataFrame, exclude: String): Seq[String] =
-    ReleasePartitions.sketchHitReleases(spark, s"$path/$SketchDir",
-      ReleasePartitions.releases(spark, path).filterNot(_ == exclude), deltaGrams)
+    PartitionDirs.sketchHitReleases(spark, s"$path/$SketchDir",
+      PartitionDirs.releases(spark, path).filterNot(_ == exclude), deltaGrams)
 
   /** The persisted store — (gram_h long, release string). A NONEXISTENT
     * path reads as an EMPTY frame of that schema, because [[append]]
@@ -141,8 +141,8 @@ object GramStore {
              keep: String => Boolean): Seq[String] = {
     // a dropped release's gram sketch goes with its partition
     // ([[readSketches]]' invariant)
-    ReleasePartitions.vacuum(spark, s"$path/$SketchDir", keep)
-    ReleasePartitions.vacuum(spark, path, keep)
+    PartitionDirs.vacuumReleases(spark, s"$path/$SketchDir", keep)
+    PartitionDirs.vacuumReleases(spark, path, keep)
   }
 
   /** A store "exists" only once it holds a `release=` partition: the
@@ -151,7 +151,7 @@ object GramStore {
     * the first partition — and such a marker-only directory must still
     * read as the empty store, not fail parquet schema inference. */
   private def exists(spark: SparkSession, path: String): Boolean =
-    ReleasePartitions.releases(spark, path).nonEmpty
+    PartitionDirs.releases(spark, path).nonEmpty
 
   /** Per-document novelty of a candidate slice against the store — the
     * incremental form of `TextAnalysis.gramNovelty` (same integer-permille

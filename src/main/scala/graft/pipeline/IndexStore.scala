@@ -78,11 +78,12 @@ object IndexStore {
     val dfR = rotate(df, embCol, rot)
     val model = Similarity.ivfPqTrain(dfR, idCol, embCol, dim, kCoarse,
       coarseIters, m, ksub, iters)
+    val fs = PartitionDirs.fs(spark, path)
     // a rebuild OVER an existing store is a new quantizer epoch exactly like
     // a rebalance — bump the generation so graphs derived from the previous
     // build read as stale (a fresh path starts at 0)
     val gen =
-      if (fsOf(spark, path).exists(new org.apache.hadoop.fs.Path(s"$path/meta")))
+      if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/meta")))
         generation(spark, path) + 1
       else 0L
     writeModel(spark, s"$path/meta", model)
@@ -93,8 +94,8 @@ object IndexStore {
     // a build IS the store: stale sketches of a previous incarnation's
     // releases must not survive into the fresh one
     val sketchDir = new org.apache.hadoop.fs.Path(s"$path/$IdSketchDir")
-    if (fsOf(spark, path).exists(sketchDir))
-      require(fsOf(spark, path).delete(sketchDir, true),
+    if (fs.exists(sketchDir))
+      require(fs.delete(sketchDir, true),
         s"build failed to reset $sketchDir")
     writeIdSketch(spark, path, release,
       df.select(col(idCol).cast("long").as("cand_id")))
@@ -112,7 +113,7 @@ object IndexStore {
 
   /** The frozen OPQ rotation, or None for a plain (identity) store. */
   def readRotation(spark: SparkSession, path: String): Option[Array[Double]] = {
-    val fs = fsOf(spark, path)
+    val fs = PartitionDirs.fs(spark, path)
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/meta/rotation"))) None
     else Some(spark.read.schema(RotationSchema).parquet(s"$path/meta/rotation")
       .select(col("i").cast("int"), col("w").cast("double"))
@@ -133,7 +134,7 @@ object IndexStore {
       arr.zipWithIndex.map { case (x, i) => (i, x) }.toSeq.toDF("i", "w")
         .coalesce(1).write.mode("overwrite").parquet(s"$metaPath/rotation")
     case None =>
-      val fs = fsOf(spark, metaPath)
+      val fs = PartitionDirs.fs(spark, metaPath)
       val p = new org.apache.hadoop.fs.Path(s"$metaPath/rotation")
       if (fs.exists(p)) require(fs.delete(p, true), s"failed to delete $p")
   }
@@ -149,7 +150,7 @@ object IndexStore {
     * rerun (the in-flight "I just rebalanced" flag does not survive a crash;
     * the generation does). Absent marker (pre-generation store) reads 0. */
   def generation(spark: SparkSession, path: String): Long = {
-    val fs = fsOf(spark, path)
+    val fs = PartitionDirs.fs(spark, path)
     val p = new org.apache.hadoop.fs.Path(s"$path/meta/$GenFile")
     if (!fs.exists(p)) 0L
     else {
@@ -165,7 +166,7 @@ object IndexStore {
   /** `metaPath` is the meta directory (or its `.next` staging copy). */
   private def writeGeneration(spark: SparkSession, metaPath: String,
                               gen: Long): Unit = {
-    val fs = fsOf(spark, metaPath)
+    val fs = PartitionDirs.fs(spark, metaPath)
     val out = fs.create(new org.apache.hadoop.fs.Path(s"$metaPath/$GenFile"), true)
     try out.write(gen.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
@@ -242,7 +243,7 @@ object IndexStore {
     }
 
   /** Per-release kilobyte ID SKETCHES — the
-    * [[ReleasePartitions.writeSketch]] sidecar of each release partition's
+    * [[PartitionDirs.writeSketch]] sidecar of each release partition's
     * stored `cand_id`s, persisted beside the quantizer metadata. They exist
     * for ONE caller: the nightly delta-newness audit
     * ([[VectorRelease.maintain]] step b), which must prove the night's
@@ -262,17 +263,17 @@ object IndexStore {
 
   private def writeIdSketch(spark: SparkSession, path: String,
                             release: String, ids: DataFrame): Unit =
-    ReleasePartitions.writeSketch(spark, s"$path/$IdSketchDir", release, ids)
+    PartitionDirs.writeSketch(spark, s"$path/$IdSketchDir", release, ids)
 
   def readIdSketches(spark: SparkSession, path: String): Map[String, Array[Byte]] =
-    ReleasePartitions.readSketches(spark, s"$path/$IdSketchDir")
+    PartitionDirs.readSketches(spark, s"$path/$IdSketchDir")
 
   /** The prior releases that MIGHT share an id with `deltaIds`
-    * ([[ReleasePartitions.sketchHitReleases]]) — the sketch consult that
+    * ([[PartitionDirs.sketchHitReleases]]) — the sketch consult that
     * makes a clean night's dup audit O(delta). */
   def sketchHitReleases(spark: SparkSession, path: String,
                         deltaIds: DataFrame, exclude: String): Seq[String] =
-    ReleasePartitions.sketchHitReleases(spark, s"$path/$IdSketchDir",
+    PartitionDirs.sketchHitReleases(spark, s"$path/$IdSketchDir",
       listCodeReleases(spark, path).filterNot(_ == exclude), deltaIds)
 
   /** The index store's AUDIT CLOCK ([[StoreAudit.readAuditClock]]) lives
@@ -283,17 +284,11 @@ object IndexStore {
 
   /** Distinct release names present in the code table, from the partition
     * directory listing (no file reads — the [[vacuum]] walk). */
-  private def listCodeReleases(spark: SparkSession, path: String): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(s"$path/codes")
-    val fs = fsOf(spark, path)
-    if (!fs.exists(root)) Seq.empty
-    else (for {
-      cell <- fs.listStatus(root).toSeq
-      if cell.isDirectory && cell.getPath.getName.startsWith("cell=")
-      rel <- fs.listStatus(cell.getPath).toSeq
-      if rel.isDirectory && rel.getPath.getName.startsWith("release=")
-    } yield rel.getPath.getName.stripPrefix("release=")).distinct
-  }
+  private def listCodeReleases(spark: SparkSession, path: String): Seq[String] =
+    PartitionDirs.list(spark, s"$path/codes", CodeCols).map(_.values.last).distinct
+
+  /** The partition columns of both tiers' code tables, outermost first. */
+  private[graft] val CodeCols = Seq("cell", "release")
 
   /** Where a [[serve]]'s exact rerank reads full vectors from. */
   sealed trait Rerank
@@ -440,7 +435,7 @@ object IndexStore {
   /** True when the store carries the int8 rerank tier. */
   def hasRerank(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(s"$path/rerank/stats")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    PartitionDirs.fs(spark, path).exists(p)
   }
 
   /** The int8 tier's code rows — (cand_id, cell, release, q8), an empty
@@ -450,7 +445,7 @@ object IndexStore {
     * touched one tier but not the other shows as orphan/missing rows. */
   def readRerankCodes(spark: SparkSession, path: String): DataFrame = {
     val p = s"$path/rerank/codes"
-    val fs = fsOf(spark, path)
+    val fs = PartitionDirs.fs(spark, path)
     // emptiness is decided by LISTING (the readTombstones fail-closed
     // idiom): a vacuum that dropped every release leaves empty cell dirs
     // with no footers to infer a schema from — that is a legitimate empty
@@ -573,7 +568,7 @@ object IndexStore {
         lit(EavStore.FilesPerPartition)))
       .write.mode("overwrite")
     (if (dynamic) out.option("partitionOverwriteMode", "dynamic") else out)
-      .partitionBy("cell", "release")
+      .partitionBy(CodeCols: _*)
       .parquet(s"$path/rerank/codes")
   }
 
@@ -822,7 +817,7 @@ object IndexStore {
     * every taken-down id, the unsafe direction for the
     * right-to-be-forgotten path (TombstoneRaceSpec pins both cases). */
   def readTombstones(spark: SparkSession, path: String): Option[DataFrame] = {
-    val fs = fsOf(spark, path)
+    val fs = PartitionDirs.fs(spark, path)
     val dir = new org.apache.hadoop.fs.Path(s"$path/$TombDir")
     if (!fs.exists(dir)) None
     else if (fs.listStatus(dir)
@@ -850,7 +845,7 @@ object IndexStore {
     * [[readTombstones]]' distinct absorbs and the next clear removes. */
   private[pipeline] def clearTombstones(spark: SparkSession, path: String,
                                         purged: DataFrame): Unit = {
-    val fs = fsOf(spark, path)
+    val fs = PartitionDirs.fs(spark, path)
     val dir = new org.apache.hadoop.fs.Path(s"$path/$TombDir")
     if (!fs.exists(dir)) return
     val oldFiles = fs.listStatus(dir).filter(_.isFile)
@@ -907,7 +902,7 @@ object IndexStore {
         // produced `tomb0` may still be lazily read, and the clear at the
         // end deletes its files
         val tomb = tomb0.localCheckpoint()
-        val fs = fsOf(spark, path)
+        val fs = PartitionDirs.fs(spark, path)
         val removed = Seq("codes", "rerank/codes").map { sub =>
           val root = new org.apache.hadoop.fs.Path(s"$path/$sub")
           if (!fs.exists(root)) sub -> 0L
@@ -959,8 +954,8 @@ object IndexStore {
                 case (pair, (n, nt)) if n > nt => pair
               }.toSet
               affected.filterNot(live).foreach { case (c, r) =>
-                val p = new org.apache.hadoop.fs.Path(
-                  s"$path/$sub/cell=$c/release=$r")
+                val p = PartitionDirs.locate(s"$path/$sub",
+                  "cell" -> c, "release" -> r)
                 if (fs.exists(p))
                   require(fs.delete(p, true), s"purge failed to delete $p")
               }
@@ -968,7 +963,7 @@ object IndexStore {
                 survivors.repartition(col("cell"), col("release"))
                   .write.mode("overwrite")
                   .option("partitionOverwriteMode", "dynamic")
-                  .partitionBy("cell", "release")
+                  .partitionBy(CodeCols: _*)
                   .parquet(s"$path/$sub")
               spark.catalog.refreshByPath(s"$path/$sub")
               sub -> nRemoved
@@ -983,7 +978,7 @@ object IndexStore {
     }
 
   /** Retention vacuum: delete the code partitions of every release `keep`
-    * rejects — [[EavStore.vacuum]]'s contract on the (cell, release) layout
+    * rejects — [[PartitionDirs.drop]] on the (cell, release) layout
     * (quantizer metadata is release-independent and stays). Returns the
     * distinct dropped release names. A release append after a vacuum simply
     * re-encodes that release map-only. */
@@ -993,30 +988,14 @@ object IndexStore {
     // must vacuum with it — a rejected release's tier rows are never
     // servable (the shortlist can no longer contain its ids) but would
     // accumulate as dead scan bytes in every probed-cell rerank pass
-    def sweep(sub: String): Seq[String] = {
-      val root = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(root)) Seq.empty
-      else for {
-        cell <- fs.listStatus(root).toSeq
-        if cell.isDirectory && cell.getPath.getName.startsWith("cell=")
-        rel <- fs.listStatus(cell.getPath).toSeq
-        if rel.isDirectory && rel.getPath.getName.startsWith("release=")
-        name = rel.getPath.getName.stripPrefix("release=")
-        if !keep(name)
-      } yield {
-        // fs.delete reports failure by RETURNING false, not throwing — a
-        // silently-failed delete must not be recorded as dropped
-        require(fs.delete(rel.getPath, true),
-          s"vacuum failed to delete ${rel.getPath}")
-        name
-      }
-    }
+    def sweep(sub: String): Seq[String] =
+      PartitionDirs.drop(spark, s"$path/$sub", CodeCols, v => keep(v.last))
+        .map(_.last)
     // a dropped release's id sketch goes with it ([[readIdSketches]] —
     // otherwise the dup consult would keep naming a release whose
     // partitions no longer exist; harmless for correctness, but the clean
     // night's "no prior files touched" claim should hold by construction)
-    ReleasePartitions.vacuum(spark, s"$path/$IdSketchDir", keep)
+    PartitionDirs.vacuumReleases(spark, s"$path/$IdSketchDir", keep)
     (sweep("codes") ++ sweep("rerank/codes")).distinct
   }
 
@@ -1071,35 +1050,24 @@ object IndexStore {
   def compact(spark: SparkSession, path: String,
               target: String => Boolean): Map[String, Seq[String]] = {
     def one(sub: String): Seq[String] = {
-      val root = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(root)) Seq.empty
+      val rels = PartitionDirs.list(spark, s"$path/$sub", CodeCols)
+        .map(_.values.last).filter(target).distinct.sorted
+      if (rels.isEmpty) Seq.empty
       else {
-        val rels = (for {
-          cell <- fs.listStatus(root).toSeq
-          if cell.isDirectory && cell.getPath.getName.startsWith("cell=")
-          rel <- fs.listStatus(cell.getPath).toSeq
-          if rel.isDirectory && rel.getPath.getName.startsWith("release=")
-          name = rel.getPath.getName.stripPrefix("release=")
-          if target(name)
-        } yield name).distinct.sorted
-        if (rels.isEmpty) Seq.empty
-        else {
-          spark.catalog.refreshByPath(s"$path/$sub")
-          // pin the batch's rows before overwriting the files they came
-          // from (the rollForwardOnDisk self-overwrite contract), then
-          // route each (cell, release) combo to one task → one file
-          val pinned = spark.read.parquet(s"$path/$sub")
-            .where(col("release").isin(rels.map(r => r: Any): _*))
-            .localCheckpoint()
-          pinned.repartition(col("cell"), col("release"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("cell", "release")
-            .parquet(s"$path/$sub")
-          spark.catalog.refreshByPath(s"$path/$sub")
-          rels
-        }
+        spark.catalog.refreshByPath(s"$path/$sub")
+        // pin the batch's rows before overwriting the files they came
+        // from (the rollForwardOnDisk self-overwrite contract), then
+        // route each (cell, release) combo to one task → one file
+        val pinned = spark.read.parquet(s"$path/$sub")
+          .where(col("release").isin(rels.map(r => r: Any): _*))
+          .localCheckpoint()
+        pinned.repartition(col("cell"), col("release"))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy(CodeCols: _*)
+          .parquet(s"$path/$sub")
+        spark.catalog.refreshByPath(s"$path/$sub")
+        rels
       }
     }
     Map("codes" -> one("codes"), "rerank/codes" -> one("rerank/codes"))
@@ -1223,13 +1191,13 @@ object IndexStore {
     // minus the realized tombstones — so the old sketches stay valid
     // supersets ([[readIdSketches]]' invariant; a scrubbed id costs at
     // most a spurious fallback scan)
+    val fs = PartitionDirs.fs(spark, path)
     val oldSketches = new org.apache.hadoop.fs.Path(s"$path/$IdSketchDir")
-    if (fsOf(spark, path).exists(oldSketches))
-      org.apache.hadoop.fs.FileUtil.copy(fsOf(spark, path), oldSketches,
-        fsOf(spark, path),
+    if (fs.exists(oldSketches))
+      org.apache.hadoop.fs.FileUtil.copy(fs, oldSketches, fs,
         new org.apache.hadoop.fs.Path(s"$path/meta.next/idsketch"),
         false, spark.sparkContext.hadoopConfiguration)
-    enc.write.mode("overwrite").partitionBy("cell", "release")
+    enc.write.mode("overwrite").partitionBy(CodeCols: _*)
       .parquet(s"$path/codes.next")
     // the guard's verdict, collected by the write above at zero extra jobs;
     // a trip aborts BEFORE the swap marker, so the serving store is
@@ -1249,7 +1217,6 @@ object IndexStore {
         "a partial corpus would silently shrink the store; pass every " +
         "resident vector (or vacuum the releases you mean to drop first)")
     }
-    val fs = fsOf(spark, path)
     fs.create(new org.apache.hadoop.fs.Path(s"$path/$SwapMarker"), true).close()
     finishSwap(spark, path)
     // the swapped-in codes carry no id from the PINNED snapshot (relMap
@@ -1278,7 +1245,7 @@ object IndexStore {
     * the old store exactly as it was. Safe to call any time (no-op on a
     * healthy store). */
   def recover(spark: SparkSession, path: String): Unit = {
-    val fs = fsOf(spark, path)
+    val fs = PartitionDirs.fs(spark, path)
     if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/$SwapMarker")))
       finishSwap(spark, path)
     else
@@ -1290,15 +1257,11 @@ object IndexStore {
 
   private val SwapMarker = "_SWAP_READY"
 
-  private def fsOf(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** The committed swap, each step idempotent so a crashed swap resumes:
     * for meta then codes — if `.next` exists, delete the old dir and
     * rename `.next` in; finally drop the marker. */
   private def finishSwap(spark: SparkSession, path: String): Unit = {
-    val fs = fsOf(spark, path)
+    val fs = PartitionDirs.fs(spark, path)
     Seq("meta", "codes").foreach { d =>
       val next = new org.apache.hadoop.fs.Path(s"$path/$d.next")
       val cur = new org.apache.hadoop.fs.Path(s"$path/$d")
@@ -1382,7 +1345,7 @@ object IndexStore {
         lit(EavStore.FilesPerPartition)))
     val w = enc.write.mode("overwrite")
     (if (dynamic) w.option("partitionOverwriteMode", "dynamic") else w)
-      .partitionBy("cell", "release")
+      .partitionBy(CodeCols: _*)
       .parquet(codesPath)
   }
 }

@@ -1,54 +1,85 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{escapePathName, generatePartitionPath, unescapePathName}
 import org.apache.spark.sql.functions.{col, max, when}
 
 import graft.functions.BloomSketch
 
-/** Shared helpers for stores parquet-partitioned by a top-level `release=`
-  * directory ([[SignatureStore]], [[GramStore]], the per-release sketch
-  * sidecars): the listing, the retention vacuum and the Bloom sketch
-  * sidecar. */
-private[pipeline] object ReleasePartitions {
+/** The stores' Hive-style partition-directory layout, in one place: a store
+  * root holds one `col=value` directory level per partition column, in the
+  * order the writer's `partitionBy` names them — `partition_id`
+  * ([[EavStore]]), `release` ([[SignatureStore]], [[GramStore]], the
+  * per-release sketch sidecars below) or `cell, release` (both tiers of
+  * [[IndexStore]]). Names and values are written with Spark's path
+  * escaping (`:` becomes `%3A`, `/` becomes `%2F`, `+` stays as it is), so
+  * every listing decodes with Spark's own unescaping and every path to one
+  * partition is built with Spark's own escaping. All three operations are
+  * metadata only: they list, test and delete directories and run no Spark
+  * job. */
+private[graft] object PartitionDirs {
 
-  /** The `release=` directories under `path` (metadata only; a missing
-    * path lists nothing). */
-  private def releaseDirs(spark: SparkSession,
-                          path: String): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("release="))
-  }
+  /** The filesystem holding `path`. */
+  def fs(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** The release names under `path`'s `release=` directories. */
-  def releases(spark: SparkSession, path: String): Seq[String] =
-    releaseDirs(spark, path).map(_.getPath.getName.stripPrefix("release="))
+  /** One leaf partition directory and its decoded values, in column order. */
+  final case class Leaf(path: Path, values: Seq[String])
 
-  /** Delete every release the predicate rejects, loudly failing on a silent
-    * delete (Hadoop `fs.delete` reports failure by RETURNING false, not
-    * throwing). The session listing cache is refreshed so a plan built
-    * after the vacuum cannot read the dropped files' stale listing. */
-  def vacuum(spark: SparkSession, path: String,
-             keep: String => Boolean): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Seq.empty
-    else {
-      val dropped = for {
-        rel <- releaseDirs(spark, path)
-        name = rel.getPath.getName.stripPrefix("release=")
-        if !keep(name)
-      } yield {
-        require(fs.delete(rel.getPath, true),
-          s"vacuum failed to delete ${rel.getPath}")
-        name
+  /** Every leaf partition directory under `root` for the partition columns
+    * `cols`, outermost first. A missing root lists nothing; entries that are
+    * not `col=value` directories (files, `_`-prefixed sidecars) are skipped.
+    * One `listStatus` per directory walked. */
+  def list(spark: SparkSession, root: String, cols: Seq[String]): Seq[Leaf] = {
+    val fs = this.fs(spark, root)
+    def walk(dir: Path, rest: Seq[String], values: Vector[String]): Seq[Leaf] =
+      rest match {
+        case Seq() => Seq(Leaf(dir, values))
+        case c +: tail =>
+          val prefix = escapePathName(c) + "="
+          fs.listStatus(dir).toSeq
+            .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
+            .flatMap { s =>
+              walk(s.getPath, tail,
+                values :+ unescapePathName(s.getPath.getName.stripPrefix(prefix)))
+            }
       }
-      spark.catalog.refreshByPath(path)
-      dropped.distinct
-    }
+    val r = new Path(root)
+    if (!fs.exists(r)) Seq.empty else walk(r, cols, Vector.empty)
   }
+
+  /** The directory of the partition `spec` (column -> value, outermost
+    * first) under `root`, escaped as Spark's writer escapes it. */
+  def locate(root: String, spec: (String, String)*): Path =
+    generatePartitionPath(spec.toMap, spec.map(_._1), new Path(root))
+
+  /** Delete every leaf partition whose decoded values `keep` rejects and
+    * return those values. A delete that fails fails loudly (Hadoop
+    * `fs.delete` reports failure by RETURNING false, not throwing), so a
+    * partition is never reported dropped while its rows stay on disk. The
+    * session's listing cache is refreshed, so a plan built afterwards cannot
+    * read the dropped files' stale listing. */
+  def drop(spark: SparkSession, root: String, cols: Seq[String],
+           keep: Seq[String] => Boolean): Seq[Seq[String]] = {
+    val fs = this.fs(spark, root)
+    val dropped = list(spark, root, cols).filterNot(l => keep(l.values)).map { l =>
+      require(fs.delete(l.path, true), s"failed to delete partition ${l.path}")
+      l.values
+    }
+    spark.catalog.refreshByPath(root)
+    dropped
+  }
+
+  /** The release names of a store partitioned by `release` alone. */
+  def releases(spark: SparkSession, path: String): Seq[String] =
+    list(spark, path, Seq("release")).map(_.values.head)
+
+  /** Drop every release of a `release`-partitioned store that `keep`
+    * rejects ([[drop]]); returns the dropped names. */
+  def vacuumReleases(spark: SparkSession, path: String,
+                     keep: String => Boolean): Seq[String] =
+    drop(spark, path, Seq("release"), v => keep(v.head)).map(_.head)
 
   /** Per-release kilobyte SKETCH SIDECAR — a [[BloomSketch]] of each
     * release partition's stored keys, one `release=` partition per store

@@ -58,12 +58,8 @@ object SignatureStore {
   def append(spark: SparkSession, path: String, release: String,
              docs: DataFrame, idCol: String, textCol: String): Unit = {
     val sigs = signatures(docs, idCol, textCol)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (sigs.isEmpty) {
-      if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-        vacuum(spark, path, name => name != release)
-    } else
+    if (sigs.isEmpty) vacuum(spark, path, name => name != release)
+    else
       sigs
         .withColumn("release", lit(release))
         .repartition(pmod(xxhash64(col("doc_id")), lit(EavStore.FilesPerPartition)))
@@ -78,14 +74,14 @@ object SignatureStore {
     spark.read.parquet(path)
 
   /** Retention vacuum — the license-retraction/GDPR contract every
-    * release-partitioned store here carries ([[EavStore.vacuum]] /
-    * [[IndexStore.vacuum]]): delete the partitions of every release `keep`
-    * rejects. Signature partitions are independent (each release stores
-    * ALL its own documents' rows), so the vacuum is EXACT — dedup simply
-    * stops seeing the retracted releases. Returns the dropped names. */
+    * partitioned store here carries through [[PartitionDirs.drop]]: delete
+    * the partitions of every release `keep` rejects. Signature partitions
+    * are independent (each release stores ALL its own documents' rows), so
+    * the vacuum is EXACT — dedup simply stops seeing the retracted
+    * releases. Returns the dropped names. */
   def vacuum(spark: SparkSession, path: String,
              keep: String => Boolean): Seq[String] =
-    ReleasePartitions.vacuum(spark, path, keep)
+    PartitionDirs.vacuumReleases(spark, path, keep)
 
   /** TAKEDOWN delete — the text tier's [[IndexStore.delete]]+purge in one
     * step (signature rows are strictly per-document, so removal is EXACT
@@ -114,10 +110,9 @@ object SignatureStore {
         .localCheckpoint()
       val live = survivors.select(col("release").cast("string")).distinct()
         .collect().map(_.getString(0)).toSet
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = PartitionDirs.fs(spark, path)
       affected.filterNot(live).foreach { r =>
-        val p = new org.apache.hadoop.fs.Path(s"$path/release=$r")
+        val p = PartitionDirs.locate(path, "release" -> r)
         if (fs.exists(p))
           require(fs.delete(p, true), s"delete failed to remove $p")
       }

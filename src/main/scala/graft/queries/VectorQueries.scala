@@ -942,18 +942,10 @@ object VectorQueries {
             col("embedding").cast("array<double>").as("cand_emb")))
         // a private clone: the tear and the repair MUTATE the store
         val dst = clonePath(s, src)
-        val fs = new org.apache.hadoop.fs.Path(dst)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
         // fault injection: drop every r1 partition of the rerank tier
         // only (codes survive — the exact one-tier-rewritten divergence)
-        val root = new org.apache.hadoop.fs.Path(s"$dst/rerank/codes")
-        fs.listStatus(root)
-          .filter(st => st.isDirectory &&
-            st.getPath.getName.startsWith("cell="))
-          .map(st => new org.apache.hadoop.fs.Path(st.getPath, "release=r1"))
-          .filter(fs.exists)
-          .foreach(p => require(fs.delete(p, true), s"tear failed: $p"))
-        s.catalog.refreshByPath(s"$dst/rerank/codes")
+        graft.pipeline.PartitionDirs.drop(s, s"$dst/rerank/codes",
+          graft.pipeline.IndexStore.CodeCols, _.last != "r1")
         dst
       }
       def parity = graft.pipeline.StoreAudit.card("rerank_int8",
@@ -995,14 +987,10 @@ object VectorQueries {
       val root = timedFixture("q209_text_store_repair") {
         // a private clone of the shared q207 stores: tear + repair MUTATE
         val dst = clonePath(s, auditStores(s, dir))
-        val conf = s.sparkContext.hadoopConfiguration
-        val fs = new org.apache.hadoop.fs.Path(dst).getFileSystem(conf)
-        Seq(s"$dst/sigs/release=r1", s"$dst/grams/release=r2").foreach { p =>
-          require(fs.delete(new org.apache.hadoop.fs.Path(p), true),
-            s"tear failed: $p")
+        Seq(s"$dst/sigs" -> "r1", s"$dst/grams" -> "r2").foreach { case (p, r) =>
+          require(graft.pipeline.PartitionDirs
+            .vacuumReleases(s, p, _ != r).nonEmpty, s"tear failed: $p release $r")
         }
-        s.catalog.refreshByPath(s"$dst/sigs")
-        s.catalog.refreshByPath(s"$dst/grams")
         dst
       }
       val sigUniverse = docs.select(col("doc_id"),

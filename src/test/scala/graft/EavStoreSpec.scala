@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.storage.StorageLevel
 
-import graft.pipeline.EavStore
+import graft.pipeline.{EavStore, GramStore, IndexStore, PartitionDirs, SignatureStore}
 
 class EavStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -223,6 +223,81 @@ class EavStoreSpec extends SparkSpec {
     assert(seen === Set("2026_8_1|a+b", "2026_8_2|a+b"), seen)
     assert(EavStore.read(spark, dir).select("hash").as[String].collect().toSeq
       === Seq("h2"))
+
+    // Every store layout, with a value Spark writes as it is ('+') and one
+    // it escapes (':' as %3A): the listing and the vacuum predicate see the
+    // written values, and a takedown that empties the escaped release
+    // leaves none of its rows on disk or servable.
+    val values = Seq("a+b", "a:b")
+    val docs = graft.sources.Tables.load(spark, sf, "documents")
+    val emb = graft.sources.Tables.load(spark, sf, "embeddings")
+    def half(df: DataFrame, id: String, i: Int) = df.where(col(id) % 2 === i)
+    def cands(df: DataFrame) = df.select(col("vec_id").cast("long").as("cand_id"),
+      col("embedding").cast("array<double>").as("cand_emb"))
+    case class Layout(name: String, cols: Seq[String], tables: Seq[String],
+                      write: String => Unit,
+                      vacuum: (String, String => Boolean) => Seq[String],
+                      takedown: Option[String => Unit] = None)
+    val layouts = Seq(
+      Layout("eav", Seq("partition_id"), Seq(""),
+        d => EavStore.upsert(spark, values.zipWithIndex.map { case (v, i) =>
+          row(s"h$i", v, "2021-01-01", s"p$i") }.toDF(cols: _*), d),
+        EavStore.vacuum(spark, _, _)),
+      Layout("signature", Seq("release"), Seq(""),
+        d => values.zipWithIndex.foreach { case (v, i) =>
+          SignatureStore.append(spark, d, v, half(docs, "doc_id", i), "doc_id", "text") },
+        SignatureStore.vacuum(spark, _, _),
+        Some(d => {
+          val gone = half(docs, "doc_id", 1).select(col("doc_id").cast("long"))
+          assert(SignatureStore.delete(spark, d, gone) === gone.count())
+          assert(SignatureStore.read(spark, d).where(col("release") === "a:b").isEmpty,
+            "signature rows of the emptied release survive its takedown")
+        })),
+      Layout("gram", Seq("release"), Seq(""),
+        d => values.zipWithIndex.foreach { case (v, i) =>
+          GramStore.append(spark, d, v, half(docs, "doc_id", i), "text") },
+        GramStore.vacuum(spark, _, _)),
+      Layout("index", Seq("cell", "release"), Seq("/codes", "/rerank/codes"),
+        d => {
+          IndexStore.build(spark, d, half(emb, "vec_id", 0), "vec_id", "embedding",
+            dim = 64, kCoarse = 8, coarseIters = 4, m = 16, ksub = 8, iters = 3,
+            release = "a+b")
+          IndexStore.buildRerank(spark, d, cands(half(emb, "vec_id", 0)))
+          IndexStore.append(spark, d, half(emb, "vec_id", 1), "vec_id", "embedding", "a:b")
+          IndexStore.appendRerank(spark, d, cands(half(emb, "vec_id", 1)), "a:b")
+        },
+        IndexStore.vacuum(spark, _, _),
+        Some(d => {
+          val gone = cands(half(emb, "vec_id", 1))
+          IndexStore.delete(spark, d, gone.select("cand_id"))
+          val removed = IndexStore.purge(spark, d)
+          assert(removed === Map("codes" -> gone.count(), "rerank/codes" -> gone.count()))
+          assert(IndexStore.readCodes(spark, d).where(col("release") === "a:b").isEmpty,
+            "code rows of the emptied release survive its purge")
+          assert(IndexStore.readRerankCodes(spark, d).where(col("release") === "a:b").isEmpty,
+            "rerank-tier rows of the emptied release survive its purge")
+          val queries = gone.select(col("cand_id").as("q_id"), col("cand_emb").as("q_emb"))
+          val served = IndexStore.query(spark, d, queries, cands(emb),
+            nProbe = 8, k = 5, shortlist = 100)
+          assert(served.count() > 0)
+          assert(served.join(gone, Seq("cand_id")).isEmpty,
+            "a purged id is servable again")
+        })))
+    layouts.foreach { l =>
+      val d = LocalSession.tempDir(s"layout_${l.name}").toString + "/store"
+      def listed = l.tables.map(t => t ->
+        PartitionDirs.list(spark, d + t, l.cols).map(_.values.last).toSet).toMap
+      l.write(d)
+      assert(listed === l.tables.map(_ -> values.toSet).toMap, l.name)
+      val seen = scala.collection.mutable.Set[String]()
+      assert(l.vacuum(d, { v => seen += v; true }) === Seq.empty, l.name)
+      assert(seen === values.toSet, l.name)
+      l.takedown.foreach { takedown =>
+        takedown(d)
+        assert(listed === l.tables.map(_ -> Set("a+b")).toMap,
+          s"${l.name}: the emptied release's directories survive the takedown")
+      }
+    }
   }
 
   test("vacuum drops partitions failing the retention predicate, nothing else") {

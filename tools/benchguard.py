@@ -31,9 +31,10 @@ Round-15 rule (the q185 lesson: a 19.2 s drift reading of a 4.5 s query
 rode a committed artifact because only >10x movers failed): ANY single-query
 mover above ISOLATION_RATIO additionally requires an AGREEING isolation
 re-run before the artifact may be committed. Re-measure the movers alone
-(`sbt "runMain graft.BenchSome <q> ..."`), record {"<q>": seconds} in a JSON
-file and pass it as --isolated. A mover whose isolated seconds confirm the
-candidate (within CONFIRM_TOL) is genuine and passes; one the isolation
+(`python3 tools/isolate.py iso.json <q> ...`, a two-pass named Bench run,
+writes {"<q>": seconds} to iso.json) and pass that file as --isolated. A
+mover whose isolated seconds confirm the candidate (within CONFIRM_TOL) is
+genuine and passes; one the isolation
 disproves — or that has no isolation entry at all — fails the gate.
 """
 import json
@@ -138,7 +139,7 @@ def main():
     if unconfirmed:
         fail = True
         print(f"FAIL: {len(unconfirmed)} movers >{ISOLATION_RATIO:.0f}x with "
-              f"no isolation re-run (re-measure each alone with BenchSome "
+              f"no isolation re-run (re-measure each alone with isolate.py "
               f"and pass --isolated):")
         for q, ratio in unconfirmed:
             print(f"  {q}: {rq[q]:.2f}s -> {cq[q]:.2f}s ({ratio:.1f}x)")

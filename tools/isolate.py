@@ -4,14 +4,16 @@
 Usage:
     python3 tools/isolate.py out.json q185_unified_release [q20_... ...]
 
-Runs `sbt "runMain graft.BenchSome <queries>"` (two passes, the BenchSome
-contract), parses the pass-2 (steady) seconds per query, and writes them as
-the {"<query>": seconds} JSON that `benchguard.py --isolated` consumes.
-Pass-1 (cold) seconds are printed for the record but not written: the
-bench artifacts under guard are steady-pass numbers.
+Runs `sbt "runMain graft.Bench <queries>"` with SPARK_GRAFT_BENCH_PASSES=2
+(a named Bench run: the same warmup and pass loop as the full surface,
+only the named queries, no artifact written), reads the steady second
+pass's seconds per query from the `queries_chunk` lines, and writes them
+as the {"<query>": seconds} JSON that `benchguard.py --isolated` consumes.
+A query with no reading, or with Bench's -1 failure sentinel, fails the
+run: the bench artifacts under guard are steady-pass numbers.
 """
 import json
-import re
+import os
 import subprocess
 import sys
 
@@ -20,21 +22,27 @@ def main():
     if len(sys.argv) < 3:
         sys.exit(__doc__)
     out_path, names = sys.argv[1], sys.argv[2:]
-    cmd = ["sbt", "-batch", f"runMain graft.BenchSome {' '.join(names)}"]
-    res = subprocess.run(cmd, capture_output=True, text=True)
+    cmd = ["sbt", "-batch", f"runMain graft.Bench {' '.join(names)}"]
+    env = dict(os.environ, SPARK_GRAFT_BENCH_PASSES="2")
+    res = subprocess.run(cmd, capture_output=True, text=True, env=env)
     if res.returncode != 0:
         sys.stderr.write(res.stdout[-2000:] + res.stderr[-2000:])
-        sys.exit(f"isolate: BenchSome failed rc={res.returncode}")
+        sys.exit(f"isolate: Bench failed rc={res.returncode}")
     iso = {}
     for line in res.stdout.splitlines():
-        m = re.match(r"\[bench(\d)\] (\S+)\s+([0-9.]+) s", line.strip())
-        if m:
-            print(line.strip())
-            if m.group(1) == "2":
-                iso[m.group(2)] = float(m.group(3))
+        line = line.strip()
+        if line.startswith('{"metric":"queries_chunk"'):
+            iso.update(json.loads(line)["queries"])
+    for name in names:
+        if name in iso:
+            print(f"[isolate] {name:<24} {iso[name]:7.2f} s")
     missing = [n for n in names if n not in iso]
     if missing:
         sys.exit(f"isolate: no pass-2 reading for {', '.join(missing)}")
+    failed = [n for n in names if iso[n] < 0]
+    if failed:
+        sys.exit(f"isolate: query failed in Bench: {', '.join(failed)}")
+    iso = {n: iso[n] for n in names}
     with open(out_path, "w") as f:
         json.dump(iso, f, indent=1, sort_keys=True)
     print(f"isolate: wrote {out_path} ({len(iso)} queries)")
